@@ -134,16 +134,27 @@ def _q_pages_text_invariant(spark, sf_dir):
     )
 
 
-def _q_pprl_classified(spark, sf_dir):
-    """Reference-set classification stage: per-record block-id arrays from prefix binary search + Levenshtein (D1)."""
+def _pprl_blocked(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """``run_pipeline``'s classify -> block path over the documents-derived
+    parties: (classify_wide output, purged block elements)."""
     records = _pprl_records(spark, sf_dir)
     rs = testdata.reference_sets_from_records(records, CFG)
     db = max(
         records.where("party='A'").count(), records.where("party='B'").count()
     )
     samples = classify.build_reference_samples(rs, CFG, db)
-    out = classify.classify(spark, records, samples, CFG)
-    return out.groupBy("party", "s").agg(
+    classified = classify.classify_wide(spark, records, samples, CFG)
+    elements = blocking.purge_blocks(
+        blocking.block_ids_from_arrays(classified, CFG), CFG
+    )
+    return classified, elements
+
+
+def _q_pprl_classified(spark, sf_dir):
+    """Reference-set classification stage: per-record block-id arrays from prefix binary search + Levenshtein (D1)."""
+    classified, _ = _pprl_blocked(spark, sf_dir)
+    cells = classified.select("party", F.explode("arr").alias("c"))
+    return cells.select("party", "c.s", "c.score").groupBy("party", "s").agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("score").alias("score_sum"),
         F.count(F.when(F.col("score") == 0, 1)).alias("n_exact"),
@@ -152,14 +163,7 @@ def _q_pprl_classified(spark, sf_dir):
 
 def _q_pprl_block_elements(spark, sf_dir):
     """Block table after purge: (blockID, party, recordID) with oversized blocks dropped (J1)."""
-    records = _pprl_records(spark, sf_dir)
-    rs = testdata.reference_sets_from_records(records, CFG)
-    db = max(
-        records.where("party='A'").count(), records.where("party='B'").count()
-    )
-    samples = classify.build_reference_samples(rs, CFG, db)
-    classified = classify.classify(spark, records, samples, CFG)
-    elements = blocking.purge_blocks(blocking.block_ids(classified, CFG), CFG)
+    _, elements = _pprl_blocked(spark, sf_dir)
     return elements.groupBy("party").agg(
         F.count(F.lit(1)).alias("n_elements"),
         F.countDistinct("blockID").alias("n_blocks"),
@@ -168,14 +172,7 @@ def _q_pprl_block_elements(spark, sf_dir):
 
 def _q_pprl_edge_weights(spark, sf_dir):
     """Meta-blocking CBS/ARCS edge-weight table over the purged blocks."""
-    records = _pprl_records(spark, sf_dir)
-    rs = testdata.reference_sets_from_records(records, CFG)
-    db = max(
-        records.where("party='A'").count(), records.where("party='B'").count()
-    )
-    samples = classify.build_reference_samples(rs, CFG, db)
-    classified = classify.classify(spark, records, samples, CFG)
-    elements = blocking.purge_blocks(blocking.block_ids(classified, CFG), CFG)
+    _, elements = _pprl_blocked(spark, sf_dir)
     w = window.candidate_edge_weights(elements, CFG)
     return w.groupBy("cbs_weight").agg(
         F.count(F.lit(1)).alias("n_pairs"),
@@ -189,14 +186,7 @@ def _q_pprl_pruned_candidates(spark, sf_dir):
     pairs co-occurring in >= 2 distinct blocks. Exercises the weighted
     branch of window.candidate_pairs under the value oracle (the default
     driver pipeline takes the slim unweighted branch)."""
-    records = _pprl_records(spark, sf_dir)
-    rs = testdata.reference_sets_from_records(records, CFG)
-    db = max(
-        records.where("party='A'").count(), records.where("party='B'").count()
-    )
-    samples = classify.build_reference_samples(rs, CFG, db)
-    classified = classify.classify(spark, records, samples, CFG)
-    elements = blocking.purge_blocks(blocking.block_ids(classified, CFG), CFG)
+    _, elements = _pprl_blocked(spark, sf_dir)
     cfg2 = dataclasses.replace(CFG, min_cbs_weight=2)
     return window.candidate_pairs(elements, cfg2)
 

@@ -43,12 +43,9 @@ def wait_for_quiet() -> tuple[float, float]:
     the timeout — the driver must get its artifact either way, and the
     recorded load discloses a contaminated window.
 
-    Deliberately NOT shared with scripts/run_scaling.wait_for_quiet:
-    bench.py is the driver-contract artifact and must stay runnable
-    standalone (scripts/ is not a package), and the two gates want
-    different trade-offs (bench: permissive 2.0 with a short bounded
-    wait so the driver always gets a number; campaigns: strict 1.2 with
-    a long wait because a contaminated trial is worthless)."""
+    The gate is deliberately permissive (2.0, short bounded wait) so a
+    run always yields a number; the benchmark of record,
+    ``perfbench/run.py``, gates each timed run on host steal instead."""
     t0 = time.time()
     while time.time() - t0 < LOAD_GATE_TIMEOUT_S:
         load = os.getloadavg()[0]
@@ -65,6 +62,9 @@ from scalable_blocking_for_privacy_preserving_record_linkage_spark.plans import 
 )
 from scalable_blocking_for_privacy_preserving_record_linkage_spark.plans.pipeline import (  # noqa: E402
     run_pipeline,
+)
+from scalable_blocking_for_privacy_preserving_record_linkage_spark.session import (  # noqa: E402
+    get_spark,
 )
 
 # benched subset of __spark_entry__.queries(): the scale-sensitive ones
@@ -86,24 +86,6 @@ BENCH_QUERIES = [
     "mm_bytestats",         # binary-payload Arrow mapInPandas path
     "pprl_hlsh_matches",    # HLSH blocking -> Dice (alt blocking path)
 ]
-
-
-def build_spark(cpus: int) -> SparkSession:
-    return (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("pprl-bench")
-        .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # PPRL stages are CPU-heavy per byte; 64MB advisory would coalesce
-        # post-shuffle parallelism below the core count (see session.py)
-        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "4m")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
 
 
 def warm_up(spark: SparkSession, sf_dir: str) -> None:
@@ -169,7 +151,14 @@ def main() -> None:
         sf = -1.0
 
     load_at_start, gated_s = wait_for_quiet()
-    spark = build_spark(cpus)
+    spark = get_spark(
+        app_name="pprl-bench",
+        master=f"local[{cpus}]",
+        shuffle_partitions=cpus,
+        extra_conf={
+            "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g")
+        },
+    )
     spark.sparkContext.setLogLevel("ERROR")
     warm_up(spark, sf_dir)
 

@@ -6,7 +6,7 @@ apostolistselios/scalable-blocking-for-privacy-preserving-record-linkage
 DataFrame/Catalyst application: reference-set blocking, Bloom-filter (CLK)
 encoding, sorted-neighborhood candidate generation, Dice-coefficient
 matching, transitive clustering — plus the web-scale extensions the
-north star requires (block purging, skew salting, checkpoint/resume,
+north star requires (block purging, checkpoint/resume,
 dedup / similarity / text-analysis operators for training-data pipelines).
 """
 

@@ -86,7 +86,6 @@ class PPRLConfig:
     # score_joined dispatch on the column type, so either works
     # everywhere).
     bloom_representation: str = "dense"
-    salt_buckets: int = 0                        # >0: salt hot groupBy keys
     # meta-blocking edge pruning (north-star; reference has none):
     # keep a candidate pair only if it co-occurs in >= min_cbs_weight blocks
     # (CBS) and, if set, its sum of 1/|block| >= min_arcs_weight (ARCS)

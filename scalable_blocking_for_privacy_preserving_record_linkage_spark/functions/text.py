@@ -117,17 +117,6 @@ def qgrams_expr(text: Column, q: int) -> Column:
     )
 
 
-def bigrams_expr(text: Column) -> Column:
-    """Adjacent word bigrams joined with one space; < 2 tokens -> []."""
-    toks = tokens_expr(text)
-    return F.when(F.size(toks) < 2, F.array().cast("array<string>")).otherwise(
-        F.transform(
-            F.sequence(F.lit(0), F.size(toks) - 2),
-            lambda i: F.concat_ws(" ", F.element_at(toks, i + 1), F.element_at(toks, i + 2)),
-        )
-    )
-
-
 def top_bigram_fraction_expr(text: Column) -> Column:
     """Fraction of word bigrams taken by the single most frequent bigram —
     the Gopher-style within-document repetition signal (boilerplate and

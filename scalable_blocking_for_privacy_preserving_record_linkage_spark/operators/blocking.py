@@ -1,13 +1,14 @@
-"""Block-ID construction and block assembly (phase 1b/1c of the reference).
+"""Block-ID construction and block purging (phase 1b/1c of the reference).
 
-* ``block_ids`` reproduces ``createBlockIDs``
-  (/root/reference/src/main/java/com/algorithms/ReferenceSetBlocking.java:209-236)
-  as a PURE CATALYST expression (array_sort + transform + explode): cyclic
-  adjacent pairing of a record's classIDs, blockID = lexicographically
-  ordered ``"{c_i}-{c_(i+1 mod n)}"``, score = score_i + score_(i+1 mod n).
-  The reference pairs entries in nondeterministic ``collect_list`` order
-  (SURVEY.md §2.8.1); we sort by sample index ``s`` first — the intended
-  S1-S2, S2-S3, …, S12-S1 pairing, made deterministic.
+* ``block_ids_from_arrays`` reproduces ``createBlockIDs``
+  (``ReferenceSetBlocking.java:209-236``) over ``classify_wide``'s
+  s-ordered cell arrays as a PURE CATALYST projection (transform +
+  explode, no shuffle): cyclic adjacent pairing of a record's classIDs,
+  blockID = lexicographically ordered ``"{c_i}-{c_(i+1 mod n)}"``,
+  score = score_i + score_(i+1 mod n). The reference pairs entries in
+  nondeterministic ``collect_list`` order (SURVEY.md §2.8.1); the array
+  is ordered by sample index ``s`` at construction — the intended S1-S2,
+  S2-S3, …, S12-S1 pairing, made deterministic.
 
 * ``purge_blocks`` is the meta-blocking block-purge the north star requires
   (the reference has only the implicit both-parties purge of its inner join,
@@ -15,11 +16,6 @@
   count-aggregate + semi-join so hot blockIDs (duplicate boilerplate pages)
   are dropped BEFORE any wide rows or arrays materialize — this is the skew
   guard for the 10^12-scale shuffle.
-
-* ``assemble_blocks`` reproduces the reference's per-block sorted element
-  arrays (ReferenceSetBlocking.java:96-134,187-207) for inspection /
-  checkpointing; the candidate-pair generator itself consumes the flat
-  element stream (one fewer shuffle).
 
 Total order within a block is (score, party, recordID) — the reference's
 Bob-first stable tiebreak (ReferenceSetBlocking.java:196-205) is
@@ -61,8 +57,10 @@ def _cyclic_pair_expr(arr_col: str = "arr"):
     )
 
 
-def _explode_pairs(grouped: DataFrame) -> DataFrame:
-    paired = grouped.select(
+def block_ids_from_arrays(classified_wide: DataFrame, cfg: PPRLConfig) -> DataFrame:
+    """(recordID, party, arr) from ``classify_wide`` -> (blockID, recordID,
+    party, score). A pure projection, so it runs in streaming append mode."""
+    paired = classified_wide.select(
         "recordID", "party", F.explode(_cyclic_pair_expr("arr")).alias("b")
     )
     return paired.select(
@@ -71,23 +69,6 @@ def _explode_pairs(grouped: DataFrame) -> DataFrame:
         "party",
         F.col("b.score").alias("score"),
     )
-
-
-def block_ids(classified: DataFrame, cfg: PPRLConfig) -> DataFrame:
-    """(recordID, party, s, classID, score) -> (blockID, recordID, party, score).
-
-    One shuffle (groupBy recordID); the cyclic pairing itself is narrow.
-    """
-    grouped = classified.groupBy("recordID", "party").agg(
-        F.array_sort(F.collect_list(F.struct("s", "classID", "score"))).alias("arr")
-    )
-    return _explode_pairs(grouped)
-
-
-def block_ids_from_arrays(classified_wide: DataFrame, cfg: PPRLConfig) -> DataFrame:
-    """Stateless variant over ``classify_wide`` output (recordID, party,
-    arr) — a pure projection, so it runs in streaming append mode."""
-    return _explode_pairs(classified_wide)
 
 
 def purge_blocks(
@@ -137,38 +118,3 @@ def purge_blocks(
     if require_both_parties:
         cond = cond & (F.col("_nA") > 0) & (F.col("_nB") > 0)
     return counted.where(cond).drop("_nA", "_nB")
-
-
-def assemble_blocks(elements: DataFrame, salt_buckets: int = 0) -> DataFrame:
-    """(blockID, recordID, party, score) -> per-block sorted element arrays.
-
-    Mirrors the reference Block table (rank = Σ scores, Block.java:36-42 —
-    computed there but unused downstream; we keep it as a purge weight).
-
-    ``salt_buckets > 0`` enables two-phase SALTED aggregation — the
-    explicit skew guard the north star requires for collect_list-style
-    groupBys, where a hot blockID (duplicate boilerplate pages) would
-    otherwise funnel its whole array into one task: phase 1 groups by
-    (blockID, hash(recordID) % salt), phase 2 merges the per-salt partial
-    arrays with flatten + array_sort. Counts/sums already partial-agg
-    map-side; salting matters for the unbounded array payload.
-    """
-    struct_col = F.struct("score", "party", "recordID")
-    if salt_buckets <= 0:
-        return elements.groupBy("blockID").agg(
-            F.array_sort(F.collect_list(struct_col)).alias("elements"),
-            F.sum("score").alias("rank"),
-            F.count(F.lit(1)).alias("size"),
-        )
-    partial = elements.withColumn(
-        "_salt", F.pmod(F.hash("recordID"), F.lit(salt_buckets))
-    ).groupBy("blockID", "_salt").agg(
-        F.collect_list(struct_col).alias("_part"),
-        F.sum("score").alias("_rank"),
-        F.count(F.lit(1)).alias("_n"),
-    )
-    return partial.groupBy("blockID").agg(
-        F.array_sort(F.flatten(F.collect_list("_part"))).alias("elements"),
-        F.sum("_rank").alias("rank"),
-        F.sum("_n").alias("size"),
-    )

@@ -1,21 +1,23 @@
 """Reference-set classification (phase 1 of the reference pipeline).
 
 Reproduces ``ReferenceSetBlocking.classifyBlockingAttribute``
-(/root/reference/src/main/java/com/algorithms/ReferenceSetBlocking.java:151-184)
-with two deliberate structural rewrites for scale (SURVEY.md §2.5/§4.2):
+(``ReferenceSetBlocking.java:151-184``) with two deliberate structural
+rewrites for scale (SURVEY.md §2.5/§4.2):
 
-* The reference runs 12 separate ``map`` stages (3 attrs × 4 samples) and
-  unions them (ReferenceSetBlocking.java:28-68). We run ONE pass: the party
-  table is unpivoted to (id, attr_idx, value), exploded with a literal
-  sample-index array, and classified by a single pandas UDF — one shuffle
-  instead of twelve lambda stages.
+* The reference runs 12 separate ``map`` stages (3 attrs × 4 samples),
+  unions them and regroups by record (ReferenceSetBlocking.java:28-68).
+  ``classify_wide`` runs ONE projection instead: every (attribute, sample)
+  cell of a record is classified by the same pandas UDF inside a single
+  array column, ordered by sample index ``s``. No explode, no shuffle, so
+  the batch pipeline, the streaming jobs and ``__spark_entry__`` share it
+  unchanged (``blocking.block_ids_from_arrays`` pairs the array next).
 * The driver-side ``SecureRandom`` Durstenfeld shuffle
-  (/root/reference/src/main/java/com/utils/DurstenfeldShuffle.java:8-26) is
-  replaced by a SEEDED hash permutation: candidates are ordered by
-  ``md5("{seed}|{s}|{value}")`` and the first RS_SIZE taken. Determinism is
-  a test requirement (documented divergence, SURVEY.md §2.8.2), and the md5
-  keying makes the draw reproducible in ANY engine — the DuckDB oracles
-  re-derive the exact reference samples with ``ORDER BY md5(...) LIMIT n``.
+  (DurstenfeldShuffle.java:8-26) is replaced by a SEEDED hash permutation:
+  candidates are ordered by ``md5("{seed}|{s}|{value}")`` and the first
+  RS_SIZE taken. Determinism is a test requirement (documented divergence,
+  SURVEY.md §2.8.2), and the md5 keying makes the draw reproducible in ANY
+  engine — the DuckDB oracles re-derive the exact reference samples with
+  ``ORDER BY md5(...) LIMIT n``.
 
 The sorted samples are broadcast once and consumed inside the UDF via the
 exact prefix-binary-search + Levenshtein semantics of the reference
@@ -79,39 +81,14 @@ def build_reference_samples(
     return samples
 
 
-def unpivot_records(records: DataFrame, cfg: PPRLConfig) -> DataFrame:
-    """(id, party, attr1..attrN) -> (recordID, party, attr_idx, value).
-
-    Catalyst-only unpivot (explode of a literal struct array) — the
-    single-pass replacement for the reference's 12-way union (U1, SURVEY §2.5).
-    """
-    pairs = F.array(
-        *[
-            F.struct(
-                F.lit(i + 1).alias("attr_idx"),
-                F.col(attr).cast("string").alias("value"),
-            )
-            for i, attr in enumerate(cfg.blocking_attrs)
-        ]
-    )
-    return (
-        records.select(
-            F.col(cfg.id_col).cast("string").alias("recordID"),
-            F.col("party"),
-            F.explode(pairs).alias("p"),
-        )
-        .select("recordID", "party", F.col("p.attr_idx").alias("attr_idx"), F.col("p.value").alias("value"))
-    )
-
-
 def make_classify_udf(
     spark: SparkSession,
     samples: dict[int, np.ndarray],
     cfg: PPRLConfig,
 ):
     """Build the vectorized (s, value) -> (classID, score) pandas UDF with
-    the sorted samples broadcast once. Shared by the batch grid pass
-    (``classify``) and the stateless wide pass (``classify_wide``)."""
+    the sorted samples broadcast once. ``classify_cells_expr`` calls it
+    once per (attribute, sample) cell."""
     bc = spark.sparkContext.broadcast(
         {s: np.asarray(v, dtype=object) for s, v in samples.items()}
     )
@@ -161,40 +138,6 @@ def make_classify_udf(
     return _classify
 
 
-def classify(
-    spark: SparkSession,
-    records: DataFrame,
-    samples: dict[int, np.ndarray],
-    cfg: PPRLConfig,
-) -> DataFrame:
-    """One-pass classification over the exploded (attr, sample) grid.
-
-    Output: (recordID, party, s, classID, score) — one row per record ×
-    attribute × sample, classID = ``"S{s}.{pos}"`` exactly as
-    ReferenceSetBlocking.java:176,180.
-    """
-    _classify = make_classify_udf(spark, samples, cfg)
-    num_samples = cfg.num_samples
-    unpivoted = unpivot_records(records, cfg)
-    grid = unpivoted.select(
-        "recordID",
-        "party",
-        "value",
-        F.explode(
-            F.sequence(
-                (F.col("attr_idx") - 1) * num_samples + 1,
-                F.col("attr_idx") * num_samples,
-            )
-        ).alias("s"),
-    )
-    return grid.select(
-        "recordID",
-        "party",
-        F.col("s").cast("int").alias("s"),
-        _classify("s", "value").alias("c"),
-    ).select("recordID", "party", "s", F.col("c.classID").alias("classID"), F.col("c.score").alias("score"))
-
-
 def classify_wide(
     spark: SparkSession,
     records: DataFrame,
@@ -206,8 +149,8 @@ def classify_wide(
     Streaming append mode unchanged (streaming/jobs.py).
 
     Output: (recordID, party, arr: array<struct<s:int, classID, score>>),
-    arr ordered by s — the same shape ``block_ids`` builds via
-    groupBy+collect+sort in the batch path.
+    arr ordered by s, classID = ``"S{s}.{pos}"`` exactly as
+    ReferenceSetBlocking.java:176,180.
     """
     _classify = make_classify_udf(spark, samples, cfg)
     return records.select(

@@ -27,8 +27,7 @@ completed stage (north-star resumability requirement).
 
 from __future__ import annotations
 
-import time
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -49,7 +48,6 @@ class PipelineResult:
     matches: DataFrame
     components: DataFrame | None
     metrics: LinkageMetrics | None
-    timings: dict = field(default_factory=dict)
 
 
 def run_pipeline(
@@ -58,20 +56,11 @@ def run_pipeline(
     reference_sets: DataFrame,
     cfg: PPRLConfig,
     checkpoint_dir: str | None = None,
-    resume: bool = True,
     with_clusters: bool = True,
     with_metrics: bool = True,
-    truncate_lineage: bool = False,
 ) -> PipelineResult:
     """records: (id, surname, name, city, party); reference_sets: (col1..colN)."""
     ph = cfg.params_hash()
-    timings: dict[str, float] = {}
-
-    def timed(name, fn):
-        t0 = time.time()
-        out = checkpoint_stage(fn, spark, checkpoint_dir, name, ph, resume)
-        timings[name] = time.time() - t0
-        return out
 
     normalized = ensure_parallelism(extract.normalize_records(records, cfg)).cache()
 
@@ -91,43 +80,45 @@ def run_pipeline(
     samples = classify.build_reference_samples(reference_sets, cfg, db_size)
 
     # stateless wide classify: all 12 (attr, sample) cells in one projection
-    # per record — no explode-then-regroup shuffle (the grid variant,
-    # classify.classify, remains for incremental/inspection paths)
-    classified = timed(
-        "classified", lambda: classify.classify_wide(spark, normalized, samples, cfg)
+    # per record — no explode-then-regroup shuffle
+    classified = checkpoint_stage(
+        lambda: classify.classify_wide(spark, normalized, samples, cfg),
+        spark, checkpoint_dir, "classified", ph,
     )
-    elements = timed(
-        "block_elements",
+    elements = checkpoint_stage(
         lambda: blocking.purge_blocks(
             blocking.block_ids_from_arrays(classified, cfg), cfg
         ),
+        spark, checkpoint_dir, "block_elements", ph,
     )
-    candidates = timed("candidates", lambda: window.candidate_pairs(elements, cfg))
+    candidates = checkpoint_stage(
+        lambda: window.candidate_pairs(elements, cfg),
+        spark, checkpoint_dir, "candidates", ph,
+    )
     # the reference caches matches before its double count (Simulator.java:50);
     # without a durable checkpoint we truncate lineage locally so downstream
     # consumers (Dice join, clustering, metrics) never re-run the classify/
     # window DAG — matches MUST be built from the checkpointed candidates
-    truncate = checkpoint_dir is None and (
-        with_clusters or with_metrics or truncate_lineage
-    )
+    truncate = checkpoint_dir is None and (with_clusters or with_metrics)
     if truncate:
         candidates = candidates.localCheckpoint()
-    blooms = timed("blooms", lambda: matching.encode_blooms(normalized, cfg))
-    matches = timed(
-        "matches", lambda: matching.match_candidates(candidates, blooms, cfg)
+    blooms = checkpoint_stage(
+        lambda: matching.encode_blooms(normalized, cfg),
+        spark, checkpoint_dir, "blooms", ph,
+    )
+    matches = checkpoint_stage(
+        lambda: matching.match_candidates(candidates, blooms, cfg),
+        spark, checkpoint_dir, "matches", ph,
     )
     if truncate:
         matches = matches.localCheckpoint()
 
     components = None
     if with_clusters:
-        t0 = time.time()
         components = clustering.connected_components(matches)
-        timings["components"] = time.time() - t0
 
     metrics = None
     if with_metrics:
-        t0 = time.time()
         # expected matches = |ids on both sides| (ground truth: id equality,
         # Simulator.java:62; the reference derives it as DB_SIZE*COMMON_RECORDS
         # from its file construction, Conf.java:54-55)
@@ -135,7 +126,6 @@ def run_pipeline(
         b_ids = normalized.where("party = 'B'").select("id")
         expected = a_ids.intersect(b_ids).count()
         metrics = evaluate(matches, candidates, n_alice, n_bob, expected)
-        timings["metrics"] = time.time() - t0
 
     return PipelineResult(
         records=normalized,
@@ -146,7 +136,6 @@ def run_pipeline(
         matches=matches,
         components=components,
         metrics=metrics,
-        timings=timings,
     )
 
 

@@ -20,7 +20,7 @@ def get_spark(
 ) -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or f"local[{cpus}]"
-    shuffle_partitions = shuffle_partitions or int(cpus) if cpus.isdigit() else 32
+    shuffle_partitions = shuffle_partitions or (int(cpus) if cpus.isdigit() else 32)
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)
@@ -37,8 +37,8 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
     )
-    # caller overrides (e.g. scripts/dice_ab.py re-enables the UI to read
-    # per-stage shuffle metrics from the REST API)
+    # caller overrides (e.g. perfbench re-enables the UI to read per-stage
+    # shuffle metrics from the REST API)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -53,11 +53,9 @@ def write_checkpoint(
     path: str,
     stage: str,
     params_hash: str,
-    repartition: int | None = None,
 ) -> DataFrame:
     t0 = time.time()
-    out = df.repartition(repartition) if repartition else df
-    out.write.mode("overwrite").parquet(path)
+    df.write.mode("overwrite").parquet(path)
     spark = df.sparkSession
     back = spark.read.parquet(path)
     per_file = (
@@ -99,14 +97,12 @@ def checkpoint_stage(
     checkpoint_dir: str | None,
     stage: str,
     params_hash: str,
-    resume: bool = True,
 ) -> DataFrame:
     """Run ``compute()`` through the checkpoint, or load the prior result."""
     if checkpoint_dir is None:
         return compute()
     path = os.path.join(checkpoint_dir, stage)
-    if resume:
-        cached = read_checkpoint(spark, path, stage, params_hash)
-        if cached is not None:
-            return cached
+    cached = read_checkpoint(spark, path, stage, params_hash)
+    if cached is not None:
+        return cached
     return write_checkpoint(compute(), path, stage, params_hash)

@@ -28,8 +28,17 @@ _MODULE_RE = re.compile(
 )
 
 
+_HELPER_RE = re.compile(r"\b(_[a-z]\w*)\(")
+
+
 def _modules_used(fn) -> str:
     body = inspect.getsource(fn)
+    # follow one level of this module's private helpers (e.g. the shared
+    # classify -> block prelude) so a query is credited with their modules
+    for name in dict.fromkeys(_HELPER_RE.findall(body)):
+        helper = getattr(entry, name, None)
+        if inspect.isfunction(helper):
+            body += inspect.getsource(helper)
     seen: list[str] = []
     for m in _MODULE_RE.findall(body):
         if m not in seen:

@@ -1,16 +1,16 @@
 """Block-ID cyclic pairing (D2) and block purge semantics."""
 
-from pyspark.sql import functions as F
-
 from scalable_blocking_for_privacy_preserving_record_linkage_spark.config import PPRLConfig
 from scalable_blocking_for_privacy_preserving_record_linkage_spark.operators import blocking
 
 CFG = PPRLConfig()
 
 
-def _classified(spark, rows):
+def _classified_wide(spark, rows):
     return spark.createDataFrame(
-        rows, "recordID string, party string, s int, classID string, score int"
+        rows,
+        "recordID string, party string, "
+        "arr array<struct<s:int,classID:string,score:int>>",
     )
 
 
@@ -19,30 +19,19 @@ def test_cyclic_pairing_matches_reference(spark):
     # sample order, cyclic wrap, lexicographically ordered blockID,
     # score = sum of the two scores
     rows = [
-        ("r1", "A", 1, "S1.2", 3),
-        ("r1", "A", 2, "S2.9", 1),
-        ("r1", "A", 3, "S3.1", 4),
+        ("r1", "A", [(1, "S1.2", 3), (2, "S2.9", 1), (3, "S3.1", 4)]),
+        ("r2", "B", [(1, "S1.5", 0), (2, "S2.2", 2), (3, "S3.9", 1)]),
     ]
-    out = blocking.block_ids(_classified(spark, rows), CFG)
-    got = {(r["blockID"], r["score"]) for r in out.collect()}
+    out = blocking.block_ids_from_arrays(_classified_wide(spark, rows), CFG)
+    got = {tuple(r) for r in out.collect()}
     assert got == {
-        ("S1.2-S2.9", 4),   # S1.2 + S2.9
-        ("S2.9-S3.1", 5),   # S2.9 + S3.1 (lexicographic: '2' < '3')
-        ("S1.2-S3.1", 7),   # wrap S3.1 + S1.2 -> ordered S1.2-S3.1
+        ("S1.2-S2.9", "r1", "A", 4),   # S1.2 + S2.9
+        ("S2.9-S3.1", "r1", "A", 5),   # S2.9 + S3.1 (lexicographic: '2' < '3')
+        ("S1.2-S3.1", "r1", "A", 7),   # wrap S3.1 + S1.2 -> ordered S1.2-S3.1
+        ("S1.5-S2.2", "r2", "B", 2),
+        ("S2.2-S3.9", "r2", "B", 3),
+        ("S1.5-S3.9", "r2", "B", 1),
     }
-
-
-def test_pairing_is_sample_order_not_collect_order(spark):
-    # pitfall SURVEY.md §2.8.1: pairing must follow sample index s even if
-    # rows arrive shuffled
-    rows = [
-        ("r1", "A", 3, "S3.1", 4),
-        ("r1", "A", 1, "S1.2", 3),
-        ("r1", "A", 2, "S2.9", 1),
-    ]
-    out = blocking.block_ids(_classified(spark, rows).repartition(4), CFG)
-    got = {r["blockID"] for r in out.collect()}
-    assert got == {"S1.2-S2.9", "S2.9-S3.1", "S1.2-S3.1"}
 
 
 def _elements(spark, rows):
@@ -69,58 +58,3 @@ def test_purge_drops_oversized_blocks(spark):
     ]
     out = blocking.purge_blocks(_elements(spark, rows), cfg)
     assert {r["blockID"] for r in out.collect()} == {"ok"}
-
-
-def test_assemble_blocks_sorted(spark):
-    rows = [
-        ("b1", "x", "B", 5),
-        ("b1", "y", "A", 2),
-        ("b1", "z", "A", 5),
-    ]
-    blk = blocking.assemble_blocks(_elements(spark, rows)).first()
-    elems = [(e["score"], e["party"], e["recordID"]) for e in blk["elements"]]
-    # ascending by score; tie at 5 -> party A before B (our total order)
-    assert elems == [(2, "A", "y"), (5, "A", "z"), (5, "B", "x")]
-    assert blk["rank"] == 12 and blk["size"] == 3
-
-
-def test_assemble_blocks_salted_equals_plain(spark):
-    rows = [
-        ("b1", f"r{i}", "A" if i % 2 else "B", i % 7) for i in range(40)
-    ] + [("b2", "x", "A", 1), ("b2", "y", "B", 0)]
-    df = spark.createDataFrame(
-        rows, "blockID string, recordID string, party string, score int"
-    )
-    plain = {
-        r["blockID"]: (tuple(map(tuple, r["elements"])), r["rank"], r["size"])
-        for r in blocking.assemble_blocks(df).collect()
-    }
-    salted = {
-        r["blockID"]: (tuple(map(tuple, r["elements"])), r["rank"], r["size"])
-        for r in blocking.assemble_blocks(df, salt_buckets=8).collect()
-    }
-    assert plain == salted and len(plain) == 2
-
-
-def test_block_ids_wide_equals_grid(spark):
-    """classify_wide -> block_ids_from_arrays must equal the grid path's
-    explode -> groupBy -> block_ids on the same classifications."""
-    rows = [
-        ("r1", "A", 1, "S1.2", 3),
-        ("r1", "A", 2, "S2.9", 1),
-        ("r1", "A", 3, "S3.1", 4),
-        ("r2", "B", 1, "S1.5", 0),
-        ("r2", "B", 2, "S2.2", 2),
-        ("r2", "B", 3, "S3.9", 1),
-    ]
-    grid = blocking.block_ids(_classified(spark, rows), CFG)
-    wide_rows = {}
-    for rid, party, s, cid, sc in rows:
-        wide_rows.setdefault((rid, party), []).append((s, cid, sc))
-    wide = spark.createDataFrame(
-        [(k[0], k[1], sorted(v)) for k, v in wide_rows.items()],
-        "recordID string, party string, arr array<struct<s:int,classID:string,score:int>>",
-    )
-    got = {tuple(r) for r in blocking.block_ids_from_arrays(wide, CFG).collect()}
-    want = {tuple(r) for r in grid.collect()}
-    assert got == want and len(want) == 6

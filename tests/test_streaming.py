@@ -69,8 +69,8 @@ def test_classify_stream_matches_batch(spark, record_dir):
     _run_stream(jobs.classify_stream(stream, samples, CFG), "cls_stream")
     got = spark.sql("select blockID, recordID, party, score from cls_stream")
 
-    want = blocking.block_ids(
-        classify.classify(spark, batch_records, samples, CFG), CFG
+    want = blocking.block_ids_from_arrays(
+        classify.classify_wide(spark, batch_records, samples, CFG), CFG
     )
 
     g = sorted(map(tuple, got.collect()))
@@ -85,8 +85,8 @@ def test_match_stream_against_static(spark, record_dir):
     samples = classify.build_reference_samples(
         fixtures.spark_reference_sets(spark), CFG, batch_records.count()
     )
-    static_elements = blocking.block_ids(
-        classify.classify(spark, batch_records, samples, CFG), CFG
+    static_elements = blocking.block_ids_from_arrays(
+        classify.classify_wide(spark, batch_records, samples, CFG), CFG
     )
     static_blooms = matching.encode_blooms(batch_records, CFG)
 
@@ -311,8 +311,8 @@ def test_match_stream_restart_from_checkpoint_exactly_once(spark, tmp_path):
     samples = classify.build_reference_samples(
         fixtures.spark_reference_sets(spark), CFG, records.count()
     )
-    static_elements = blocking.block_ids(
-        classify.classify(spark, records, samples, CFG), CFG
+    static_elements = blocking.block_ids_from_arrays(
+        classify.classify_wide(spark, records, samples, CFG), CFG
     )
     static_blooms = matching.encode_blooms(records, CFG)
 
@@ -457,8 +457,8 @@ def test_match_stream_midbatch_crash_restart_exactly_once(spark, tmp_path):
     samples = classify.build_reference_samples(
         fixtures.spark_reference_sets(spark), CFG, records.count()
     )
-    static_elements = blocking.block_ids(
-        classify.classify(spark, records, samples, CFG), CFG
+    static_elements = blocking.block_ids_from_arrays(
+        classify.classify_wide(spark, records, samples, CFG), CFG
     )
     static_blooms = matching.encode_blooms(records, CFG)
     records.where(F.col("party") == "B").write.mode("append").parquet(src)
