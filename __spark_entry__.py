@@ -23,8 +23,6 @@ from scalable_blocking_for_privacy_preserving_record_linkage_spark.functions imp
     text as tx,
 )
 from scalable_blocking_for_privacy_preserving_record_linkage_spark.operators import (
-    blocking,
-    classify,
     clustering,
     dedup,
     hlsh,
@@ -135,19 +133,13 @@ def _q_pages_text_invariant(spark, sf_dir):
 
 
 def _pprl_blocked(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
-    """``run_pipeline``'s classify -> block path over the documents-derived
-    parties: (classify_wide output, purged block elements)."""
+    """``run_pipeline``'s classify and blocking stages over the
+    documents-derived parties: (classify_wide output, purged block
+    elements)."""
     records = _pprl_records(spark, sf_dir)
     rs = testdata.reference_sets_from_records(records, CFG)
-    db = max(
-        records.where("party='A'").count(), records.where("party='B'").count()
-    )
-    samples = classify.build_reference_samples(rs, CFG, db)
-    classified = classify.classify_wide(spark, records, samples, CFG)
-    elements = blocking.purge_blocks(
-        blocking.block_ids_from_arrays(classified, CFG), CFG
-    )
-    return classified, elements
+    res = run_pipeline(spark, records, rs, CFG, with_clusters=False, with_metrics=False)
+    return res.classified, res.elements
 
 
 def _q_pprl_classified(spark, sf_dir):

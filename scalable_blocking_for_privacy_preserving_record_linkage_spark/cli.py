@@ -38,7 +38,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .config import PPRLConfig
-from .plans.pipeline import run_pipeline, run_pipeline_from_pages
+from .plans.pipeline import run_pipeline
+from .session import get_spark
 
 # config.properties keys -> (PPRLConfig field, parser); mirrors the
 # reference's property names (config.properties at the repo root there)
@@ -186,10 +187,7 @@ def main(argv: list[str] | None = None) -> int:
 
     cfg, extras = build_config(args)
 
-    builder = SparkSession.builder.appName("pprl-simulator")
-    if args.master:
-        builder = builder.master(args.master)
-    spark = builder.getOrCreate()
+    spark = get_spark(app_name="pprl-simulator", master=args.master)
     spark.sparkContext.setLogLevel("ERROR")
 
     if args.synthetic:

@@ -56,35 +56,13 @@ class PPRLConfig:
     # petabytes there and the join must stay a shuffled (bucketed) join.
     # AQE cannot infer this itself: the pandas-UDF encoder hides the size.
     broadcast_blooms: bool = False
-    # CLK wire format for the Dice pair stream: "dense" ships each filter
-    # as ceil(m/64) packed int64 words (fixed 376 B at m=3000, ~85% zero
-    # bytes for short attributes); "sparse" ships the sorted SET-BIT
-    # POSITIONS as array<smallint> (2 B per set bit — typically 30-150
-    # bits for name-like attributes, so 3-6x fewer raw bytes per pair on
-    # the engine's dominant shuffle). Dice semantics are IDENTICAL:
-    # |a AND b| = size(array_intersect(positions)), cardinality =
-    # size(positions) — same integers, same match set (equivalence
-    # property test in tests/test_bloom.py; HLSH keys dispatch on the
-    # column type, so both layouts work everywhere).
-    # Default = dense, decided by FULL-PIPELINE interleaved trials at
-    # three parallelism levels (BENCH/BASELINE.md round-5 section) after
-    # the isolated-stage A/B briefly flipped this to sparse. The full
-    # evidence: sparse carries 1.64x fewer shuffle bytes (lz4 already
-    # squeezes the dense zero bytes, so the raw 3-6x shrinks to 1.64x)
-    # and won the isolated attach+score stage 1.8-2.0x at local[32] on
-    # the pre-reboot host; but end-to-end, interleaved same-session
-    # trials show dense equal at 2 cores and ahead by min-stat at 8 and
-    # 32 cores (97.5 vs 105.1 s; 47.9 vs 68.2 s at inflate 32). The
-    # structural difference: size(array_intersect(p1, p2)) allocates a
-    # hash set AND a result array per pair per attribute (~50M
-    # allocations at inflate 32) while the dense path is allocation-free
-    # zip_with/bit_count codegen over primitive longs. Sparse remains
-    # one flag away for deployments whose scoring stage is provably
-    # interconnect-bound (network-shuffle clusters — the regime the
-    # isolated A/B models); both layouts are semantically identical
-    # (equivalence property test in tests/test_bloom.py; HLSH keys and
-    # score_joined dispatch on the column type, so either works
-    # everywhere).
+    # CLK wire format: "dense" ships each filter as ceil(m/64) packed
+    # int64 words (376 B at m=3000) and scores with allocation-free
+    # zip_with/bit_count codegen; "sparse" ships the sorted set-bit
+    # positions as array<smallint> (2 B per set bit) and scores with
+    # array_intersect, which allocates per pair. Same match set either way
+    # (tests/test_bloom.py); HLSH and score_joined read the layout from the
+    # column type. The HLSH benchmark workload runs sparse.
     bloom_representation: str = "dense"
     # meta-blocking edge pruning (north-star; reference has none):
     # keep a candidate pair only if it co-occurs in >= min_cbs_weight blocks

@@ -6,7 +6,8 @@ Semantics reproduced from the reference encoder
 
 * value with raw length <= 1 (or null) -> empty filter
   (BloomAlgorithms.java:31);
-* pad: ``'#' + value.strip() + '%'`` repeated ``q-1`` times
+* pad: ``'#' + value.trim() + '%'`` repeated ``q-1`` times, where Java's
+  ``trim`` strips code points <= U+0020 at both ends
   (BloomAlgorithms.java:20-26);
 * sliding q-grams (q=2) over the padded string (BloomAlgorithms.java:33-35);
 * per gram: MD5 digest split into k=4 big-endian 4-byte words
@@ -18,11 +19,13 @@ platform charset and uses *char* count as *byte* count — only correct for
 ASCII. We define UTF-8 bytes explicitly; fixtures are ASCII-folded so golden
 outputs agree.
 
-Representation: a filter is a fixed-length ``array<bigint>`` of
-``ceil(m/64)`` words; bit ``b`` lives in word ``b // 64`` at position
-``b % 64``. This keeps the *matcher* entirely JVM-side: Dice is computed with
-``zip_with`` + ``bit_count`` + ``aggregate`` (whole-stage codegen, no Python
-in the pairwise hot path) — the scale-critical property at 10^12 candidates.
+Wire formats (``PPRLConfig.bloom_representation``): "dense" is a
+fixed-length ``array<bigint>`` of ``ceil(m/64)`` words, bit ``b`` in word
+``b // 64`` at position ``b % 64``; "sparse" is the ``array<smallint>`` of
+sorted distinct set-bit positions. Both come from one q-gram walk, and the
+column's element type names the layout (``filter_layout``). The matcher
+stays JVM-side under either: Dice is ``zip_with`` + ``bit_count`` (dense) or
+``array_intersect`` (sparse), with no Python in the pairwise hot path.
 """
 
 from __future__ import annotations
@@ -32,7 +35,7 @@ import struct
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -59,76 +62,75 @@ def gram_bit_positions(gram: str, m: int, k: int = 4) -> tuple[int, ...]:
     return positions
 
 
-def encode_value(value: str | None, cfg: PPRLConfig) -> list[int]:
-    """Encode one attribute value into packed int64 words.
+# Java's String.trim() strips every code point <= U+0020 and nothing else;
+# Python's str.strip() also strips U+00A0/U+3000 and keeps \x00-\x08
+_JAVA_TRIM = "".join(map(chr, range(0x21)))
+
+
+def _set_bits(value: str | None, cfg: PPRLConfig) -> list[int]:
+    """Set-bit positions of one attribute value's CLK, repeats included.
 
     Mirrors BloomAlgorithms.string2Bloom: the length>1 check is on the RAW
     value, the pad trims afterwards (BloomAlgorithms.java:21,31).
     """
-    n_words = cfg.bloom_words
-    words = [0] * n_words
+    bits: list[int] = []
     if value is None or len(value) <= 1:
-        return words
+        return bits
     q = cfg.ngram_size
-    padded = ("#" * (q - 1)) + value.strip() + ("%" * (q - 1))
-    m = cfg.bloom_m
-    k = cfg.hash_functions
+    padded = ("#" * (q - 1)) + value.strip(_JAVA_TRIM) + ("%" * (q - 1))
     for i in range(len(padded) - q + 1):
-        for b in gram_bit_positions(padded[i : i + q], m, k):
-            words[b >> 6] |= 1 << (b & 63)
+        bits.extend(gram_bit_positions(padded[i : i + q], cfg.bloom_m, cfg.hash_functions))
+    return bits
+
+
+def encode_value(value: str | None, cfg: PPRLConfig) -> list[int]:
+    """Dense packer: the filter as ``cfg.bloom_words`` signed int64 words."""
+    words = [0] * cfg.bloom_words
+    for b in _set_bits(value, cfg):
+        words[b >> 6] |= 1 << (b & 63)
     # wrap to signed int64 (Spark LongType)
     return [w - (1 << 64) if w >= (1 << 63) else w for w in words]
 
 
-def encode_series(values: pd.Series, cfg: PPRLConfig) -> pd.Series:
-    """Arrow-batched encoder: one pass over the batch's *unique* values."""
-    uniques = pd.unique(values)
-    table = {v: encode_value(v, cfg) for v in uniques}
-    return values.map(table)
-
-
-def bloom_udf(cfg: PPRLConfig):
-    """pandas UDF: string column -> array<bigint> filter column."""
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def _encode(values: pd.Series) -> pd.Series:
-        return encode_series(values, cfg)
-
-    return _encode
-
-
 def sparse_positions_value(value: str | None, cfg: PPRLConfig) -> list[int]:
-    """Encode one attribute value as its sorted distinct set-bit
-    POSITIONS (the sparse CLK wire format; see
-    ``PPRLConfig.bloom_representation``). Same gram/hash semantics as
-    ``encode_value`` — the dense words are exactly the bitset of these
-    positions (equivalence property test in tests/test_matching.py)."""
-    if value is None or len(value) <= 1:
-        return []
-    q = cfg.ngram_size
-    padded = ("#" * (q - 1)) + value.strip() + ("%" * (q - 1))
-    m = cfg.bloom_m
-    k = cfg.hash_functions
-    positions: set[int] = set()
-    for i in range(len(padded) - q + 1):
-        positions.update(gram_bit_positions(padded[i : i + q], m, k))
-    return sorted(positions)
+    """Sparse packer: the filter as its sorted distinct set-bit positions."""
+    return sorted(set(_set_bits(value, cfg)))
 
 
-def sparse_bloom_udf(cfg: PPRLConfig):
-    """pandas UDF: string column -> array<smallint> of sorted set-bit
-    positions (positions < bloom_m = 3000 fit int16 — 2 bytes per set
-    bit on the Arrow wire and in the shuffle)."""
-    assert cfg.bloom_m <= 32767, "sparse smallint positions need m < 2^15"
+def _sparse_array(value: str | None, cfg: PPRLConfig) -> np.ndarray:
+    return np.asarray(sparse_positions_value(value, cfg), dtype=np.int16)
 
-    @F.pandas_udf(T.ArrayType(T.ShortType()))
+
+# layout -> (filter element type, packer); the one place that knows the
+# wire format. Sparse positions < bloom_m fit int16: 2 bytes per set bit on
+# the Arrow wire and in the shuffle.
+_WIRE = {
+    "dense": (T.LongType(), encode_value),
+    "sparse": (T.ShortType(), _sparse_array),
+}
+
+
+def filter_layout(df: DataFrame, col: str) -> str:
+    """Layout ("dense" or "sparse") of filter column ``col``, read from its
+    element type so a frame scores the way it was encoded."""
+    element = df.schema[col].dataType.elementType
+    for layout, (dtype, _) in _WIRE.items():
+        if element == dtype:
+            return layout
+    raise TypeError(f"{col} is not a CLK filter column: {df.schema[col].dataType}")
+
+
+def clk_udf(cfg: PPRLConfig):
+    """pandas UDF: string column -> filter column in
+    ``cfg.bloom_representation``; each distinct value of an Arrow batch is
+    encoded once."""
+    dtype, pack = _WIRE[cfg.bloom_representation]
+    if cfg.bloom_representation == "sparse":
+        assert cfg.bloom_m <= 32767, "sparse smallint positions need m < 2^15"
+
+    @F.pandas_udf(T.ArrayType(dtype))
     def _encode(values: pd.Series) -> pd.Series:
-        uniques = pd.unique(values)
-        table = {
-            v: np.asarray(sparse_positions_value(v, cfg), dtype=np.int16)
-            for v in uniques
-        }
-        return values.map(table)
+        return values.map({v: pack(v, cfg) for v in pd.unique(values)})
 
     return _encode
 
@@ -138,32 +140,25 @@ def sparse_bloom_udf(cfg: PPRLConfig):
 # ---------------------------------------------------------------------------
 
 
-def popcount_expr(filter_col: Column | str) -> Column:
-    """Cardinality of a packed filter (sum of per-word bit_count)."""
-    c = F.col(filter_col) if isinstance(filter_col, str) else filter_col
+def cardinality_expr(f: Column | str, layout: str) -> Column:
+    """|f|: per-word ``bit_count`` sum (dense) or the position count (sparse)."""
+    c = F.col(f) if isinstance(f, str) else f
+    if layout == "sparse":
+        return F.size(c)
     return F.aggregate(c, F.lit(0), lambda acc, w: acc + F.bit_count(w))
 
 
-def intersection_count_expr(f1: Column, f2: Column) -> Column:
-    """popcount(f1 AND f2) — zip_with keeps it one codegen'd expression."""
+def intersection_expr(f1: Column, f2: Column, layout: str) -> Column:
+    """|f1 AND f2| as one codegen'd expression. Dense: ``zip_with`` +
+    ``bit_count``. Sparse: positions are distinct within each filter, so the
+    set-intersection size IS the bitset-AND popcount."""
+    if layout == "sparse":
+        return F.size(F.array_intersect(f1, f2))
     return F.aggregate(
         F.zip_with(f1, f2, lambda a, b: F.bit_count(a.bitwiseAND(b))),
         F.lit(0),
         lambda acc, x: acc + x,
     )
-
-
-def sparse_card_expr(positions: Column | str) -> Column:
-    """Cardinality of a sparse filter = its position count."""
-    c = F.col(positions) if isinstance(positions, str) else positions
-    return F.size(c)
-
-
-def sparse_intersection_count_expr(p1: Column, p2: Column) -> Column:
-    """|a AND b| for two sparse position arrays: the positions are
-    distinct within each filter, so set-intersection size IS the
-    bitset-AND popcount — one JVM ArrayIntersect per pair, no Python."""
-    return F.size(F.array_intersect(p1, p2))
 
 
 def dice_pass_expr(inter: Column, card1: Column, card2: Column, threshold: float) -> Column:

@@ -70,13 +70,3 @@ def evaluate(
         reduction_ratio=rr,
     )
 
-
-def evaluate_with_labels(matches: DataFrame, labeled_pairs: DataFrame) -> DataFrame:
-    """Confusion table against an explicit labeled-pairs table
-    (record1, record2, is_match) — used for the F1-at-shared-blocking-key
-    target of BASELINE.json."""
-    m = matches.select("record1", "record2").withColumn("predicted", F.lit(True))
-    joined = labeled_pairs.join(m, ["record1", "record2"], "left").na.fill(
-        {"predicted": False}
-    )
-    return joined.groupBy("is_match", "predicted").agg(F.count(F.lit(1)).alias("n"))

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import PPRLConfig
+from ..functions.bloom import filter_layout
 
 
 def _bit_expr(cols: list[str], pos: int, m: int):
@@ -65,9 +66,7 @@ def hlsh_keys(
             f"bits_per_key={bits_per_key} exceeds total filter bits {n * m}"
         )
     cols = [f"bloom_{i+1}" for i in range(n)]
-    from pyspark.sql.types import ShortType
-
-    sparse = isinstance(blooms.schema[cols[0]].dataType.elementType, ShortType)
+    sparse = filter_layout(blooms, cols[0]) == "sparse"
     rng = np.random.default_rng(seed * 1_000 + 77)
     # one draw per pass, SAME rng sequence for both layouts (keys must be
     # wire-format-independent — property test in tests/test_bloom.py)

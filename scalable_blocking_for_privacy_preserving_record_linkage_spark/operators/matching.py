@@ -18,51 +18,48 @@ Scale design:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import ShortType
 
 from ..config import PPRLConfig
 from ..functions import bloom
 
 
-def encode_blooms(
-    records: DataFrame, cfg: PPRLConfig, representation: str | None = None
+def with_blooms(
+    df: DataFrame, keep: list[Column], cfg: PPRLConfig, side: str = ""
 ) -> DataFrame:
-    """(id, party, attr1..attrN, …) -> (recordID, party, bloom_i, card_i).
+    """``keep`` plus ``bloom{side}_i`` and ``card{side}_i`` per blocking
+    attribute, in ``cfg.bloom_representation``.
 
-    One filter per blocking attribute (MetaBlocking.java:83-85); cardinality
-    precomputed AT ENCODE TIME so the Dice denominator never recomputes
-    per pair and only (bloom, card) rides the pair stream.
-
-    ``representation`` (default ``cfg.bloom_representation``) picks the
-    wire format: "dense" packed int64 words or "sparse" sorted smallint
-    set-bit positions — identical match semantics, 3-6x fewer raw bytes
-    per pair on the sparse stream for name-like attributes (see
-    PPRLConfig.bloom_representation and the A/B in BENCH/BASELINE.md).
-    Paths that consume the word layout itself (HLSH bit segments) pass
-    representation="dense" explicitly.
+    One filter per blocking attribute (MetaBlocking.java:83-85); the
+    cardinality is computed AT ENCODE TIME so the Dice denominator never
+    recomputes per pair and only (bloom, card) rides the pair stream. The
+    filters come from one projection with ``keep``, so a caller can put
+    other pandas UDFs (the stream side's classify) in the same pass.
     """
-    rep = representation or cfg.bloom_representation
-    udf = bloom.sparse_bloom_udf(cfg) if rep == "sparse" else bloom.bloom_udf(cfg)
-    out = records.select(
-        F.col(cfg.id_col).cast("string").alias("recordID"),
-        "party",
-        *[udf(F.col(a).cast("string")).alias(f"bloom_{i+1}") for i, a in enumerate(cfg.blocking_attrs)],
+    udf = bloom.clk_udf(cfg)
+    out = df.select(
+        *keep,
+        *[
+            udf(F.col(a).cast("string")).alias(f"bloom{side}_{i+1}")
+            for i, a in enumerate(cfg.blocking_attrs)
+        ],
     )
-    card = bloom.sparse_card_expr if rep == "sparse" else bloom.popcount_expr
-    for i in range(cfg.num_attrs):
-        out = out.withColumn(f"card_{i+1}", card(f"bloom_{i+1}"))
-    return out
+    return out.select(
+        "*",
+        *[
+            bloom.cardinality_expr(f"bloom{side}_{i}", cfg.bloom_representation).alias(
+                f"card{side}_{i}"
+            )
+            for i in range(1, cfg.num_attrs + 1)
+        ],
+    )
 
 
-def _attach_blooms(pairs: DataFrame, blooms: DataFrame, cfg: PPRLConfig) -> DataFrame:
-    """(record1, record2) × blooms -> the two attach-joins: record1 takes
-    the Alice-side filters, record2 the Bob-side (MetaBlocking.java:37-41)."""
-    blooms_a, blooms_b = split_blooms(blooms, cfg)
-    if cfg.broadcast_blooms:
-        blooms_a, blooms_b = F.broadcast(blooms_a), F.broadcast(blooms_b)
-    return attach_blooms_presplit(pairs, blooms_a, blooms_b)
+def encode_blooms(records: DataFrame, cfg: PPRLConfig) -> DataFrame:
+    """(id, party, attr1..attrN, …) -> (recordID, party, bloom_i, card_i)."""
+    keep = [F.col(cfg.id_col).cast("string").alias("recordID"), F.col("party")]
+    return with_blooms(records, keep, cfg)
 
 
 def split_blooms(blooms: DataFrame, cfg: PPRLConfig) -> tuple[DataFrame, DataFrame]:
@@ -74,95 +71,55 @@ def split_blooms(blooms: DataFrame, cfg: PPRLConfig) -> tuple[DataFrame, DataFra
     (Iceberg ``bucket(N, record1)`` / ``bucket(N, record2)``, or the
     parquet stand-in in ``sources/catalog.py``): each attach-join then
     reads co-located buckets and carries no Exchange on the bloom side —
-    only the candidate-pair stream shuffles. ``attach_blooms_presplit``
-    consumes the reread tables; plan gate in tests/test_plans.py."""
+    only the candidate-pair stream shuffles (plan gate in
+    tests/test_plans.py)."""
     n = cfg.num_attrs
-    blooms_a = blooms.where(F.col("party") == "A").select(
-        F.col("recordID").alias("record1"),
-        *[F.col(f"bloom_{i+1}").alias(f"bloomA_{i+1}") for i in range(n)],
-        *[F.col(f"card_{i+1}").alias(f"cardA_{i+1}") for i in range(n)],
-    )
-    blooms_b = blooms.where(F.col("party") == "B").select(
-        F.col("recordID").alias("record2"),
-        *[F.col(f"bloom_{i+1}").alias(f"bloomB_{i+1}") for i in range(n)],
-        *[F.col(f"card_{i+1}").alias(f"cardB_{i+1}") for i in range(n)],
-    )
-    return blooms_a, blooms_b
+
+    def side(party: str, key: str) -> DataFrame:
+        return blooms.where(F.col("party") == party).select(
+            F.col("recordID").alias(key),
+            *[F.col(f"bloom_{i}").alias(f"bloom{party}_{i}") for i in range(1, n + 1)],
+            *[F.col(f"card_{i}").alias(f"card{party}_{i}") for i in range(1, n + 1)],
+        )
+
+    return side("A", "record1"), side("B", "record2")
 
 
-def attach_blooms_presplit(
-    pairs: DataFrame, blooms_a: DataFrame, blooms_b: DataFrame
-) -> DataFrame:
-    """The two attach-joins against pre-split (typically bucketed-table)
-    bloom sides from ``split_blooms`` — same join shape as
-    ``_attach_blooms`` minus the per-run party filter/rename."""
+def _attach_blooms(pairs: DataFrame, blooms: DataFrame, cfg: PPRLConfig) -> DataFrame:
+    """(record1, record2) × blooms -> the two attach-joins: record1 takes
+    the Alice-side filters, record2 the Bob-side (MetaBlocking.java:37-41)."""
+    blooms_a, blooms_b = split_blooms(blooms, cfg)
+    if cfg.broadcast_blooms:
+        blooms_a, blooms_b = F.broadcast(blooms_a), F.broadcast(blooms_b)
     return pairs.join(blooms_a, "record1", "inner").join(blooms_b, "record2", "inner")
 
 
-def match_candidates(
-    pairs: DataFrame,
-    blooms: DataFrame,
-    cfg: PPRLConfig,
-    keep_similarities: bool = False,
-) -> DataFrame:
+def match_candidates(pairs: DataFrame, blooms: DataFrame, cfg: PPRLConfig) -> DataFrame:
     """(record1, record2) × blooms -> matched pairs."""
-    return score_joined(_attach_blooms(pairs, blooms, cfg), cfg, keep_similarities)
+    return score_joined(_attach_blooms(pairs, blooms, cfg), cfg)
 
 
-def match_stats(pairs: DataFrame, blooms: DataFrame, cfg: PPRLConfig) -> DataFrame:
-    """One-row (n_candidates, n_matches) aggregate in a SINGLE pass over
-    the scored join — the throughput-measurement shape: candidate count
-    and match count come out of one action with no intermediate
-    checkpoint and no second traversal of the pair stream. Used by the
-    scaling bench; agrees with ``pairs.count()`` /
-    ``match_candidates(...).count()`` by construction (unit-tested)."""
-    scored = score_joined(_attach_blooms(pairs, blooms, cfg), cfg, unfiltered=True)
-    return scored.agg(
-        F.count(F.lit(1)).alias("n_candidates"),
-        F.count(
-            F.when(F.col("matched_fields") >= cfg.matches_to_accept, 1)
-        ).alias("n_matches"),
-    )
-
-
-def score_joined(
-    joined: DataFrame,
-    cfg: PPRLConfig,
-    keep_similarities: bool = False,
-    unfiltered: bool = False,
-) -> DataFrame:
+def score_joined(joined: DataFrame, cfg: PPRLConfig) -> DataFrame:
     """Dice-score a frame that already carries (record1, record2,
     bloomA_i/cardA_i, bloomB_i/cardB_i) — shared by the batch join path
-    and the stream-static path (streaming/jobs.py)."""
-    n = cfg.num_attrs
+    and the stream-static path (streaming/jobs.py). Each attribute scores
+    in the layout its columns carry; sides in different layouts raise."""
     passes = []
-    sims = []
-    # dispatch on the ACTUAL column type, not cfg: a frame encoded with an
-    # explicit representation= override scores correctly regardless
-    sparse = isinstance(
-        joined.schema["bloomA_1"].dataType.elementType, ShortType
-    )
-    inter_expr = (
-        bloom.sparse_intersection_count_expr
-        if sparse
-        else bloom.intersection_count_expr
-    )
-    for i in range(1, n + 1):
-        inter = inter_expr(F.col(f"bloomA_{i}"), F.col(f"bloomB_{i}"))
+    for i in range(1, cfg.num_attrs + 1):
+        a, b = f"bloomA_{i}", f"bloomB_{i}"
+        layout, b_layout = bloom.filter_layout(joined, a), bloom.filter_layout(joined, b)
+        if layout != b_layout:
+            raise ValueError(
+                f"{a} is {layout} but {b} is {b_layout}: "
+                "encode both sides under one bloom_representation"
+            )
+        inter = bloom.intersection_expr(F.col(a), F.col(b), layout)
         passes.append(
             bloom.dice_pass_expr(
                 inter, F.col(f"cardA_{i}"), F.col(f"cardB_{i}"), cfg.matching_threshold
             ).cast("int")
         )
-        if keep_similarities:
-            sims.append(
-                bloom.dice_sim_expr(
-                    inter, F.col(f"cardA_{i}"), F.col(f"cardB_{i}")
-                ).alias(f"dice_{i}")
-            )
-
     matched_fields = sum(passes[1:], passes[0]).alias("matched_fields")
-    result = joined.select("record1", "record2", matched_fields, *sims)
-    if unfiltered:
-        return result
-    return result.where(F.col("matched_fields") >= cfg.matches_to_accept)
+    return joined.select("record1", "record2", matched_fields).where(
+        F.col("matched_fields") >= cfg.matches_to_accept
+    )

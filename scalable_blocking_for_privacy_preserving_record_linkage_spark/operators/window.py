@@ -124,7 +124,7 @@ def candidate_pairs(elements: DataFrame, cfg: PPRLConfig) -> DataFrame:
         # default thresholds select every pair, so no weights are needed:
         # dedup the SLIM (record1, record2) stream directly — one exchange
         # of two string columns, nothing else rides the pipeline's fattest
-        # shuffle (this is the configuration the scaling bench measures)
+        # shuffle
         return _raw_pairs(elements, cfg).select("record1", "record2").dropDuplicates(
             ["record1", "record2"]
         )

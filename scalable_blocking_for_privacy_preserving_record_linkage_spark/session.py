@@ -1,8 +1,9 @@
 """SparkSession factory tuned for this engine.
 
-Local-mode testing only; the settings that matter at cluster scale (AQE,
-adaptive skew join, shuffle partitions, Arrow) are set here so plans seen in
-tests are the plans we'd ship.
+The one session builder for the library, the CLI, the benchmarks and the
+tests: the settings that matter at cluster scale (AQE, adaptive skew join,
+shuffle partitions, Arrow) are set here so plans seen in tests are the plans
+we'd ship.
 """
 
 from __future__ import annotations
@@ -19,11 +20,9 @@ def get_spark(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or (int(cpus) if cpus.isdigit() else 32)
     builder = (
-        SparkSession.builder.master(master)
-        .appName(app_name)
+        SparkSession.builder.appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -37,6 +36,9 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
     )
+    # without a master, spark-submit's (or pyspark's local[*]) stands
+    if master:
+        builder = builder.master(master)
     # caller overrides (e.g. perfbench re-enables the UI to read per-stage
     # shuffle metrics from the REST API)
     for k, v in (extra_conf or {}).items():

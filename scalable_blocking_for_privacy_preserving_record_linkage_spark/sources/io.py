@@ -4,8 +4,8 @@ The reference persists inputs DISK_ONLY and caches intermediates
 (Simulator.java:42-50); at 10^12 scale the north star requires durable
 checkpoints with per-partition lineage and resumability. Each stage writes
 Parquet plus a ``_MANIFEST.json`` carrying the stage name, the config hash,
-row count, per-file row counts (the lineage record), and wall time. A rerun
-with the same config hash reads the checkpoint instead of recomputing.
+the row count and the wall time. A rerun with the same config hash reads
+the checkpoint instead of recomputing.
 
 Iceberg is the production target (``writeTo(...).append()``); this
 container has no Iceberg runtime, so the writer is format-pluggable and
@@ -18,7 +18,7 @@ import json
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 MANIFEST = "_MANIFEST.json"
@@ -54,26 +54,22 @@ def write_checkpoint(
     stage: str,
     params_hash: str,
 ) -> DataFrame:
+    """Write ``df`` as the stage's Parquet checkpoint plus its manifest in
+    one job: the row count is observed during the write, and the reread
+    takes ``df``'s schema instead of inferring it from the files."""
     t0 = time.time()
-    df.write.mode("overwrite").parquet(path)
-    spark = df.sparkSession
-    back = spark.read.parquet(path)
-    per_file = (
-        back.groupBy(F.element_at(F.split(F.input_file_name(), "/"), -1).alias("file"))
-        .count()
-        .collect()
-    )
+    rows = Observation()
+    df.observe(rows, F.count(F.lit(1)).alias("rows")).write.mode("overwrite").parquet(path)
     manifest = {
         "stage": stage,
         "params_hash": params_hash,
-        "rows": int(sum(r["count"] for r in per_file)),
-        "files": {r["file"]: int(r["count"]) for r in per_file},
+        "rows": int(rows.get["rows"]),
         "wall_sec": time.time() - t0,
         "completed": True,
     }
     with open(os.path.join(path, MANIFEST), "w") as f:
         json.dump(manifest, f, indent=2, sort_keys=True)
-    return back
+    return df.sparkSession.read.schema(df.schema).parquet(path)
 
 
 def read_checkpoint(

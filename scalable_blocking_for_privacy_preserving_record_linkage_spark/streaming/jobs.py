@@ -80,12 +80,13 @@ def match_stream_against(
     join), its blocks looked up in the STATIC party-A index via a
     stream-static equi-join on blockID, and each candidate Dice-scored
     in-line. Append mode, no state store except the pair dedup.
+    ``static_blooms`` must be encoded under ``cfg.bloom_representation``;
+    ``score_joined`` raises on mixed layouts.
 
     The static side is the checkpointed output of the batch pipeline; at
     cluster scale it is a bucketed Iceberg table so the per-batch join
     needs no shuffle of the big side.
     """
-    from ..functions import bloom as bloomfn
     from ..operators.blocking import _cyclic_pair_expr
 
     n = cfg.num_attrs
@@ -93,48 +94,25 @@ def match_stream_against(
     b = incoming.where(F.col("party") == "B")
 
     classify_udf = classify.make_classify_udf(spark, samples, cfg)
-    # the stream side MUST encode with the same wire format as the
-    # caller's static_blooms (cfg.bloom_representation) — score_joined
-    # dispatches on the column type and the two sides meet per pair
-    sparse = cfg.bloom_representation == "sparse"
-    bloom_udf = bloomfn.sparse_bloom_udf(cfg) if sparse else bloomfn.bloom_udf(cfg)
-    card_expr = bloomfn.sparse_card_expr if sparse else bloomfn.popcount_expr
-    enriched = b.select(
-        F.col(cfg.id_col).cast("string").alias("record2"),
-        classify.classify_cells_expr(classify_udf, cfg).alias("arr"),
-        *[
-            bloom_udf(F.col(a).cast("string")).alias(f"bloomB_{i+1}")
-            for i, a in enumerate(cfg.blocking_attrs)
+    enriched = matching.with_blooms(
+        b,
+        [
+            F.col(cfg.id_col).cast("string").alias("record2"),
+            classify.classify_cells_expr(classify_udf, cfg).alias("arr"),
         ],
+        cfg,
+        side="B",
     )
-    for i in range(1, n + 1):
-        enriched = enriched.withColumn(
-            f"cardB_{i}", card_expr(f"bloomB_{i}")
-        )
+    b_cols = [f"{c}B_{i}" for c in ("bloom", "card") for i in range(1, n + 1)]
     stream_elements = enriched.select(
-        "record2",
-        F.explode(_cyclic_pair_expr("arr")).alias("bp"),
-        *[F.col(f"bloomB_{i}") for i in range(1, n + 1)],
-        *[F.col(f"cardB_{i}") for i in range(1, n + 1)],
-    ).select(
-        F.col("bp.blockID").alias("blockID"),
-        "record2",
-        *[f"bloomB_{i}" for i in range(1, n + 1)],
-        *[f"cardB_{i}" for i in range(1, n + 1)],
-    )
+        "record2", F.explode(_cyclic_pair_expr("arr")).alias("bp"), *b_cols
+    ).select(F.col("bp.blockID").alias("blockID"), "record2", *b_cols)
 
     # static A index: blockID -> (record1, blooms) built once, batch-side
     a_index = (
         static_elements.where(F.col("party") == "A")
         .select("blockID", F.col("recordID").alias("record1"))
-        .join(
-            static_blooms.where(F.col("party") == "A").select(
-                F.col("recordID").alias("record1"),
-                *[F.col(f"bloom_{i}").alias(f"bloomA_{i}") for i in range(1, n + 1)],
-                *[F.col(f"card_{i}").alias(f"cardA_{i}") for i in range(1, n + 1)],
-            ),
-            "record1",
-        )
+        .join(matching.split_blooms(static_blooms, cfg)[0], "record1")
     )
     joined = stream_elements.join(a_index, "blockID")
     scored = matching.score_joined(joined, cfg)

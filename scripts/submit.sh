@@ -10,8 +10,8 @@ TMP="$(mktemp -d)"
 trap 'rm -rf "$TMP"' EXIT
 ZIP="$TMP/pprl_pkg.zip"
 (cd "$ROOT" && zip -qr "$ZIP" scalable_blocking_for_privacy_preserving_record_linkage_spark __spark_entry__.py)
-# no --master: the app's SparkSession.builder picks the core count
-# (SPARK_GRAFT_CPUS / --cpus); builder config wins over submit defaults
+# no --master: the app passes its own to session.get_spark (core count from
+# SPARK_GRAFT_CPUS / --cpus); builder config wins over submit defaults
 exec spark-submit \
   --driver-memory "${SPARK_GRAFT_DRIVER_MEM:-8g}" \
   --py-files "$ZIP" \

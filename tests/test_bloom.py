@@ -23,8 +23,9 @@ def bits_of(words):
 
 
 def expected_bits(value: str) -> set:
-    """Independent reconstruction: pad, bigrams, MD5 -> 4 BE uint32 mod m."""
-    padded = "#" + value.strip() + "%"
+    """Independent reconstruction of an already-trimmed value: pad,
+    bigrams, MD5 -> 4 BE uint32 mod m."""
+    padded = "#" + value + "%"
     out = set()
     for i in range(len(padded) - 1):
         d = hashlib.md5(padded[i : i + 2].encode()).digest()
@@ -66,13 +67,24 @@ def test_trim_after_length_check():
     assert len(got) > 0
 
 
+@pytest.mark.parametrize(
+    "raw, trimmed",
+    [("\tAB\n", "AB"), ("\x00AB", "AB"), (" AB", "AB"), ("\u00a0AB\u3000", "\u00a0AB\u3000")],
+)
+def test_trim_is_java_string_trim(raw, trimmed):
+    # '#' + value.trim() + '%' (BloomAlgorithms.java:21): Java's trim strips
+    # every code point <= U+0020 (tab, newline, NUL) and nothing above it
+    assert bloom.sparse_positions_value(raw, CFG) == sorted(expected_bits(trimmed))
+    assert bits_of(bloom.encode_value(raw, CFG)) == expected_bits(trimmed)
+
+
 def _dice_df(spark, v1, v2):
     w1 = bloom.encode_value(v1, CFG)
     w2 = bloom.encode_value(v2, CFG)
     df = spark.createDataFrame([(w1, w2)], "b1 array<bigint>, b2 array<bigint>")
-    inter = bloom.intersection_count_expr(F.col("b1"), F.col("b2"))
-    c1 = bloom.popcount_expr("b1")
-    c2 = bloom.popcount_expr("b2")
+    inter = bloom.intersection_expr(F.col("b1"), F.col("b2"), "dense")
+    c1 = bloom.cardinality_expr("b1", "dense")
+    c2 = bloom.cardinality_expr("b2", "dense")
     return df.select(
         bloom.dice_sim_expr(inter, c1, c2).alias("dice"),
         bloom.dice_pass_expr(inter, c1, c2, CFG.matching_threshold).alias("passed"),
@@ -111,9 +123,9 @@ def test_dice_threshold_edge(spark):
     w1 = [0b1111] + [0] * 46
     w2 = [0b0011 | 0b110000] + [0] * 46
     df = spark.createDataFrame([(w1, w2)], "b1 array<bigint>, b2 array<bigint>")
-    inter = bloom.intersection_count_expr(F.col("b1"), F.col("b2"))
-    c1 = bloom.popcount_expr("b1")
-    c2 = bloom.popcount_expr("b2")
+    inter = bloom.intersection_expr(F.col("b1"), F.col("b2"), "dense")
+    c1 = bloom.cardinality_expr("b1", "dense")
+    c2 = bloom.cardinality_expr("b2", "dense")
     r = df.select(
         bloom.dice_sim_expr(inter, c1, c2).alias("dice"),
         bloom.dice_pass_expr(inter, c1, c2, 0.5).alias("passed"),
@@ -126,7 +138,7 @@ def test_negative_word_popcount(spark):
     # bit 63 set -> negative int64; bit_count must still count raw bits
     w = [-(1 << 63)] + [0] * 46
     df = spark.createDataFrame([(w,)], "b1 array<bigint>")
-    assert df.select(bloom.popcount_expr("b1").alias("c")).first()["c"] == 1
+    assert df.select(bloom.cardinality_expr("b1", "dense").alias("c")).first()["c"] == 1
 
 
 def test_sparse_positions_equal_dense_bits():
@@ -167,14 +179,12 @@ def test_sparse_matching_equals_dense(spark):
         records.where("party = 'A'").select(F.col("id").alias("record1"))
         .crossJoin(records.where("party = 'B'").select(F.col("id").alias("record2")))
     )
-    cfg_dense = dataclasses.replace(CFG, bloom_representation="dense")
-    cfg_sparse = dataclasses.replace(CFG, bloom_representation="sparse")
     got = {}
-    for name, cfg in (("dense", cfg_dense), ("sparse", cfg_sparse)):
+    for name in ("dense", "sparse"):
+        # matches_to_accept=0 keeps every pair, so all matched_fields compare
+        cfg = dataclasses.replace(CFG, bloom_representation=name, matches_to_accept=0)
         blooms = matching.encode_blooms(records, cfg)
-        scored = matching.score_joined(
-            matching._attach_blooms(pairs, blooms, cfg), cfg, unfiltered=True
-        )
+        scored = matching.match_candidates(pairs, blooms, cfg)
         got[name] = {
             (r["record1"], r["record2"]): r["matched_fields"]
             for r in scored.collect()
@@ -190,3 +200,26 @@ def test_sparse_matching_equals_dense(spark):
     assert got["dense"] == got["sparse"] and len(got["dense"]) == 21 * 21
     assert got["dense_cards"] == got["sparse_cards"]
     assert got["dense_hlsh"] == got["sparse_hlsh"]
+
+
+@pytest.mark.parametrize("a_layout, b_layout", [("dense", "sparse"), ("sparse", "dense")])
+def test_mixed_layout_join_raises(spark, a_layout, b_layout):
+    """An identical pair encoded under two layouts must not score silently
+    (it scored NULL or 0 matched fields instead of 3)."""
+    import dataclasses
+
+    from scalable_blocking_for_privacy_preserving_record_linkage_spark.operators import matching
+
+    rows = [("1", p, "SMITH", "ANNA", "ROME") for p in ("A", "B")]
+    records = spark.createDataFrame(
+        rows, "id string, party string, surname string, name string, city string"
+    )
+    pairs = spark.createDataFrame([("1", "1")], "record1 string, record2 string")
+
+    def side(layout, i):
+        cfg = dataclasses.replace(CFG, bloom_representation=layout)
+        return matching.split_blooms(matching.encode_blooms(records, cfg), cfg)[i]
+
+    joined = pairs.join(side(a_layout, 0), "record1").join(side(b_layout, 1), "record2")
+    with pytest.raises(ValueError, match="bloom_representation"):
+        matching.score_joined(joined, CFG)

@@ -6,9 +6,19 @@ from __future__ import annotations
 import re
 
 import pandas as pd
+import pytest
 
 from scalable_blocking_for_privacy_preserving_record_linkage_spark import cli
 from scalable_blocking_for_privacy_preserving_record_linkage_spark.sources import fixtures
+
+
+@pytest.fixture(autouse=True)
+def _restore_shuffle_partitions(spark):
+    # cli.main goes through session.get_spark, which re-applies its
+    # shuffle-partition count to the shared test session
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    yield
+    spark.conf.set("spark.sql.shuffle.partitions", before)
 
 
 def _parse_result(out: str) -> dict:

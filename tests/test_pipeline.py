@@ -1,5 +1,8 @@
 """Golden end-to-end pipeline tests + invariants (SURVEY.md §5.2)."""
 
+import json
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -12,6 +15,7 @@ from scalable_blocking_for_privacy_preserving_record_linkage_spark.plans.pipelin
 from scalable_blocking_for_privacy_preserving_record_linkage_spark.sources import (
     extract,
     fixtures,
+    io,
 )
 
 
@@ -112,6 +116,24 @@ def test_checkpoint_resume(spark, tmp_path):
     assert r3.matches is not None
 
 
+def test_write_checkpoint_runs_one_job(spark, tmp_path):
+    """The manifest's row count comes from an Observation on the write, not
+    from a second job over the written files."""
+    df = spark.range(100).withColumn("v", F.col("id") * 2)
+    sc = spark.sparkContext
+    group = "write-checkpoint-one-job"
+    sc.setJobGroup(group, "write_checkpoint")
+    try:
+        back = io.write_checkpoint(df, str(tmp_path / "stage"), "stage", "h")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    with open(os.path.join(tmp_path, "stage", io.MANIFEST)) as f:
+        manifest = json.load(f)
+    assert manifest["rows"] == 100 and manifest["completed"]
+    assert back.count() == 100
+
+
 def test_null_attrs_dropped(spark):
     cfg = PPRLConfig(rs_size_override=10, seed=7)
     recs = fixtures.spark_records(spark, 200, overlap=0.5, seed=7, null_rate=0.1)
@@ -164,19 +186,6 @@ def test_north_star_f1_gate(spark):
     m = res.metrics
     assert m.pairs_completeness >= 0.99
     assert m.f1 >= 0.99
-
-
-def test_match_stats_agrees_with_two_pass_counts(golden):
-    """match_stats (the scaling bench's one-action aggregate) must equal
-    candidates.count() / match_candidates().count() exactly."""
-    from scalable_blocking_for_privacy_preserving_record_linkage_spark.operators import matching
-
-    cfg = PPRLConfig(rs_size_override=20)
-    row = matching.match_stats(
-        golden.candidates, golden.blooms, cfg
-    ).collect()[0]
-    assert row["n_candidates"] == golden.candidates.count()
-    assert row["n_matches"] == golden.matches.count()
 
 
 def test_distributed_fixture_matches_driver_side_semantics(spark):

@@ -8,6 +8,8 @@ the unified-API contract makes the batch result the oracle.
 
 from __future__ import annotations
 
+import dataclasses
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -78,17 +80,19 @@ def test_classify_stream_matches_batch(spark, record_dir):
     assert g == w and len(g) > 0
 
 
-def test_match_stream_against_static(spark, record_dir):
+@pytest.mark.parametrize("layout", ["dense", "sparse"])
+def test_match_stream_against_static(spark, record_dir, layout):
     """New B-party records arriving as a stream match the static A index
-    exactly as the batch pipeline would."""
+    exactly as the batch pipeline would, in either CLK wire format."""
+    cfg = dataclasses.replace(CFG, bloom_representation=layout)
     batch_records = spark.read.parquet(record_dir)
     samples = classify.build_reference_samples(
-        fixtures.spark_reference_sets(spark), CFG, batch_records.count()
+        fixtures.spark_reference_sets(spark), cfg, batch_records.count()
     )
     static_elements = blocking.block_ids_from_arrays(
-        classify.classify_wide(spark, batch_records, samples, CFG), CFG
+        classify.classify_wide(spark, batch_records, samples, cfg), cfg
     )
-    static_blooms = matching.encode_blooms(batch_records, CFG)
+    static_blooms = matching.encode_blooms(batch_records, cfg)
 
     stream = jobs.stream_records(spark, record_dir, max_files_per_trigger=2)
     matched = jobs.match_stream_against(
@@ -96,16 +100,17 @@ def test_match_stream_against_static(spark, record_dir):
         static_elements,
         static_blooms,
         samples,
-        CFG,
+        cfg,
     )
-    _run_stream(matched.select("record1", "record2", "matched_fields"), "match_stream")
-    got = spark.sql("select record1, record2 from match_stream")
+    sink = f"match_stream_{layout}"
+    _run_stream(matched.select("record1", "record2", "matched_fields"), sink)
+    got = spark.sql(f"select record1, record2 from {sink}")
 
     # batch oracle: same candidate rule (shared block, no window) + Dice
     a_side = static_elements.where("party='A'").select("blockID", F.col("recordID").alias("record1"))
     b_side = static_elements.where("party='B'").select("blockID", F.col("recordID").alias("record2"))
     cand = b_side.join(a_side, "blockID").select("record1", "record2").dropDuplicates(["record1", "record2"])
-    want = matching.match_candidates(cand, static_blooms, CFG).select("record1", "record2")
+    want = matching.match_candidates(cand, static_blooms, cfg).select("record1", "record2")
 
     g = sorted(map(tuple, got.collect()))
     w = sorted(map(tuple, want.collect()))
