@@ -196,7 +196,7 @@ def _q_pprl_matches(spark, sf_dir):
 
 
 def _q_pprl_clusters(spark, sf_dir):
-    """Entity clusters: iterative min-label connected components over the match pairs."""
+    """Entity clusters: large-star/small-star connected components over the match pairs."""
     res = _pprl_pipeline(spark, sf_dir)
     return clustering.clusters_table(res.components).select(
         "component", F.col("size")
@@ -481,7 +481,8 @@ def _q_dedup_canonical(spark, sf_dir):
     (>= 0.8) -> transitive clusters -> canonical survivor per doc
     (singletons included). The oracle replays the identical LSH banding +
     verify in SQL, then min-label connected components as a recursive
-    CTE."""
+    CTE (the Spark side runs large-star/small-star; both label a
+    component with its min doc_id)."""
     d = _read(spark, sf_dir, "documents")
     return dedup.canonical_docs(
         d, num_hashes=32, num_bands=8, shingle_q=5, max_bucket_size=200,
@@ -837,7 +838,7 @@ def _q_pages_clean_pipeline(spark, sf_dir):
             F.col("doc_id") % 11 == 0,
             F.concat(
                 F.lit("shared page variant "),
-                (F.col("doc_id") / 22).cast("long").cast("string"),
+                F.expr("doc_id div 22").cast("string"),
                 F.lit(" about terms of service and cookie policy text"),
             ),
         )

@@ -181,9 +181,9 @@ def scrub_pii_expr(text: Column) -> Column:
 # Unicode hygiene — web crawls mix composed and decomposed forms of the
 # same glyph ("é" vs "e"+U+0301), which silently breaks exact dedup,
 # q-gram hashing, and the byte-identical-extract invariant. Standard
-# fix: NFC-normalize before any hashing, and scrub the C0/C1 control
-# bytes that survive HTML extraction (keep \t \n \x0B \f \r — the
-# tokenizer's whitespace class).
+# fix: NFC-normalize before any hashing, and scrub the C0 (except
+# whitespace) + DEL control bytes that survive HTML extraction (keep
+# \t \n \x0B \f \r — the tokenizer's whitespace class).
 CONTROL_CHARS_RE = r"[\x00-\x08\x0E-\x1F\x7F]"
 
 

@@ -2,15 +2,12 @@
 
 The reference stops at pairs (Simulator.java:60-72 consumes counts only);
 the north star requires entity CLUSTERS via iterative hash-join connected
-components. We implement min-label propagation over the bipartite match
-graph — each iteration is one shuffled self-join; components of a record
-linkage graph are tiny (bounded by duplicate multiplicity), so convergence
-is a handful of rounds. ``localCheckpoint`` truncates lineage each round so
-the plan does not grow (the standard Spark iterative-algorithm pattern).
-
-Node ids are namespaced ``"A:<id>"`` / ``"B:<id>"`` — the two parties are
-distinct id spaces (equal raw ids across parties is ground TRUTH, not
-identity, Simulator.java:62).
+components. We run large-star/small-star (Kiveris et al., *Connected
+Components in MapReduce and Beyond*, SoCC 2014): O(log n) rounds even on
+long chains, which is the shape of near-duplicate version chains. A
+component is labelled with its smallest node id, in the ids' own type (a
+bigint graph gets NUMERIC labels; a string cast would make "10" < "2").
+``localCheckpoint`` truncates lineage each round so the plan does not grow.
 """
 
 from __future__ import annotations
@@ -18,83 +15,94 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# 14 rounds cover a 10^4-node path; reaching the cap raises rather than
+# return a partial labelling
+MAX_ROUNDS = 64
 
-def connected_components(
-    matches: DataFrame, max_iterations: int = 20, check_every: int = 2
-) -> DataFrame:
+
+def connected_components(matches: DataFrame) -> DataFrame:
     """(record1, record2) -> (node, component) with component = min node id.
 
-    record1 is an Alice id, record2 a Bob id.
-
-    Job economy (at tiny per-iteration data, fixed job overhead dominates
-    e2e wall time): every checkpoint is LAZY — materialized by the next
-    convergence count — and the convergence check (the only action) runs
-    every ``check_every`` rounds, so two propagation rounds ride one job.
-    Linkage components are shallow (bounded by duplicate multiplicity), so
-    the extra no-op round after convergence is a cheap narrow join.
+    record1 is an Alice id, record2 a Bob id. Node ids are namespaced
+    ``"A:<id>"`` / ``"B:<id>"`` — the two parties are distinct id spaces
+    (equal raw ids across parties is ground TRUTH, not identity,
+    Simulator.java:62).
     """
-    edges = matches.select(
-        F.concat(F.lit("A:"), F.col("record1")).alias("u"),
-        F.concat(F.lit("B:"), F.col("record2")).alias("v"),
+    return _components(
+        matches.select(
+            F.concat(F.lit("A:"), F.col("record1")).alias("u"),
+            F.concat(F.lit("B:"), F.col("record2")).alias("v"),
+        )
     )
-    return _min_label_propagation(edges, max_iterations, check_every)
 
 
-def connected_components_edges(
-    pairs: DataFrame,
-    id1: str = "id1",
-    id2: str = "id2",
-    max_iterations: int = 20,
-    check_every: int = 2,
-) -> DataFrame:
-    """Unipartite variant over (id1, id2) edges in ONE id space (near-dup
-    graphs: MinHash/SimHash pairs). Node ids keep their input type, so a
-    bigint doc_id graph gets NUMERIC min-labels (a string cast would make
-    "10" < "2" and silently change the canonical representative)."""
-    edges = pairs.select(F.col(id1).alias("u"), F.col(id2).alias("v"))
-    return _min_label_propagation(edges, max_iterations, check_every)
+def canonical_clusters(ids: DataFrame, pairs: DataFrame) -> DataFrame:
+    """One-column ``ids`` + near-dup ``pairs`` (id1, id2) in the same id
+    space -> one row per id: (<id>, cluster_id = component min,
+    cluster_size, is_canonical); an id without pairs is its own cluster.
+    Sizes come from a slim groupBy + join, not a window (a boilerplate
+    mega-cluster would funnel a window into one task)."""
+    (id_col,) = ids.columns
+    comp = _components(pairs.select(F.col("id1").alias("u"), F.col("id2").alias("v")))
+    assign = ids.join(comp.withColumnRenamed("node", id_col), id_col, "left_outer").select(
+        id_col, F.coalesce("component", id_col).alias("cluster_id")
+    )
+    sizes = assign.groupBy("cluster_id").agg(
+        F.count(F.lit(1)).cast("long").alias("cluster_size")
+    )
+    return assign.join(sizes, "cluster_id").select(
+        id_col,
+        "cluster_id",
+        "cluster_size",
+        (F.col(id_col) == F.col("cluster_id")).cast("int").alias("is_canonical"),
+    )
 
 
-def _min_label_propagation(
-    edges: DataFrame, max_iterations: int, check_every: int
-) -> DataFrame:
-    """Shared iterative min-label loop over directed edges (u, v); the
-    symmetric closure is built here."""
-    adj = edges.union(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    adj = adj.dropDuplicates(["u", "v"]).localCheckpoint(eager=False)
+def _components(edges: DataFrame) -> DataFrame:
+    """Undirected edges (u, v) -> (node, component = min node id).
 
-    labels = (
-        adj.select(F.col("u").alias("node"))
+    Edges are kept as child -> parent (u > v), and ``parent`` below is each
+    child's smallest parent. Large star: every edge (u, v) re-points to
+    v's smallest parent. Small star: u and all its parents point to u's
+    smallest parent. The round's one action checks the fixed point exactly
+    and materializes the round's lazy checkpoint.
+    """
+    e = (
+        edges.select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
+        .where(F.col("u") != F.col("v"))
         .distinct()
-        .withColumn("component", F.col("node"))
         .localCheckpoint(eager=False)
     )
-
-    prev_checked = labels
-    for it in range(1, max_iterations + 1):
-        # candidate label for each node: min over (own label, neighbors' labels)
-        neighbor_labels = (
-            adj.join(labels.withColumnRenamed("node", "v"), "v")
-            .select(F.col("u").alias("node"), "component")
+    for _ in range(MAX_ROUNDS):
+        parent = e.groupBy("u").agg(F.min("v").alias("m"))
+        e = e.join(parent.withColumnRenamed("u", "v"), "v", "left").select(
+            "u", F.coalesce("m", "v").alias("v")
         )
-        new_labels = (
-            labels.unionByName(neighbor_labels)
-            .groupBy("node")
-            .agg(F.min("component").alias("component"))
+        parent = e.groupBy("u").agg(F.min("v").alias("m"))
+        e = (
+            e.join(parent, "u")
+            .select(F.col("v").alias("u"), F.col("m").alias("v"))
+            .where(F.col("u") != F.col("v"))
+            .unionByName(parent.select("u", F.col("m").alias("v")))
+            .distinct()
             .localCheckpoint(eager=False)
         )
-        labels = new_labels
-        if it % check_every == 0 or it == max_iterations:
-            changed = (
-                new_labels.alias("n")
-                .join(prev_checked.alias("o"), "node")
-                .where(F.col("n.component") != F.col("o.component"))
-                .count()
-            )
-            prev_checked = new_labels
-            if changed == 0:
-                break
-    return labels
+        if _is_star_forest(e):
+            roots = e.select(F.col("v").alias("u"), "v").distinct()
+            return e.unionByName(roots).toDF("node", "component")
+    raise RuntimeError(f"connected components did not converge in {MAX_ROUNDS} rounds")
+
+
+def _is_star_forest(e: DataFrame) -> bool:
+    """One action: does every child have exactly one parent, and is no
+    parent a child? A child that appears in any other edge fails."""
+    roles = e.select(F.col("u").alias("node"), F.lit(True).alias("child")).unionByName(
+        e.select(F.col("v").alias("node"), F.lit(False).alias("child"))
+    )
+    bad = roles.groupBy("node").agg(
+        (F.bool_or("child") & (F.count(F.lit(1)) > 1)).alias("bad")
+    )
+    return not bad.agg(F.bool_or("bad")).first()[0]
 
 
 def clusters_table(components: DataFrame) -> DataFrame:

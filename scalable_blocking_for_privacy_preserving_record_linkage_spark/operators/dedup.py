@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from ..functions import hashing
 from ..functions.text import qgrams_expr
 from ..sources.io import ensure_parallelism
+from .clustering import canonical_clusters
 
 
 def exact_duplicates(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -80,6 +81,13 @@ def minhash_lsh_pairs(
             hashing.minhash_bands_expr(F.col("signature"), num_bands, rows)
         ).alias("b"),
     ).select("id", F.col("b.band").alias("band"), F.col("b.band_sig").alias("band_sig"))
+    return _band_pairs(banded, max_bucket_size)
+
+
+def _band_pairs(banded: DataFrame, max_bucket_size: int | None) -> DataFrame:
+    """(id, band, band_sig) -> distinct (id1, id2) with id1 < id2 sharing a
+    band bucket. ``max_bucket_size`` purges hot buckets with a slim count
+    aggregate + left_semi BEFORE the self-join (the HLSH purge pattern)."""
     if max_bucket_size is not None:
         keep = (
             banded.groupBy("band", "band_sig")
@@ -340,7 +348,7 @@ def canonical_docs(
 
     Output: one row PER INPUT DOC — (doc_id, cluster_id, cluster_size,
     is_canonical) with cluster_id = min doc_id of the near-dup component
-    (numeric min, see connected_components_edges) and singletons their own
+    (numeric min, see clustering.canonical_clusters) and singletons their own
     cluster. ``docs.where(~is_canonical)`` is the drop set; filtering on
     ``is_canonical = 1`` yields the deduplicated corpus.
 
@@ -355,14 +363,13 @@ def canonical_docs(
     skips the verify (raw LSH closure).
 
     Scale shape: pair generation is the banded equi-join (never all-pairs,
-    hot buckets purged via ``max_bucket_size``); clustering is iterative
-    min-label propagation whose per-round shuffle carries only (node,
-    component) longs; cluster sizes come from a SLIM groupBy + join (NOT a
-    window — a boilerplate mega-cluster would funnel a window into one
-    task, the exact skew the bucket purge guards against upstream).
+    hot buckets purged via ``max_bucket_size``); clustering is
+    large-star/small-star connected components (O(log n) rounds, so long
+    near-dup version chains converge) whose per-round shuffles carry only
+    (child, parent) longs; cluster sizes come from a SLIM groupBy + join
+    (NOT a window — a boilerplate mega-cluster would funnel a window into
+    one task, the exact skew the bucket purge guards against upstream).
     """
-    from .clustering import connected_components_edges
-
     # Stage shape, sized for a corpus where the band self-join dominates:
     #  1. gram sets hashed ONCE and materialized (localCheckpoint) with
     #     TWO integer images — md5-32 ``bases`` feeding the MinHash
@@ -422,28 +429,7 @@ def canonical_docs(
         .select("id", F.col("b.band").alias("band"), F.col("b.band_sig").alias("band_sig"))
         .localCheckpoint(eager=False)
     )
-    if max_bucket_size is not None:
-        # slim count aggregate + left_semi: the skew guard stays BEFORE the
-        # self-join (same pattern as minhash_lsh_pairs / HLSH purge)
-        keep = (
-            banded.groupBy("band", "band_sig")
-            .count()
-            .where(F.col("count") <= max_bucket_size)
-            .select("band", "band_sig")
-        )
-        banded = banded.join(keep, ["band", "band_sig"], "left_semi")
-    left = banded.alias("l")
-    right = banded.alias("r")
-    pairs = (
-        left.join(
-            right,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.band_sig") == F.col("r.band_sig"))
-            & (F.col("l.id") < F.col("r.id")),
-        )
-        .select(F.col("l.id").alias("id1"), F.col("r.id").alias("id2"))
-        .dropDuplicates(["id1", "id2"])
-    )
+    pairs = _band_pairs(banded, max_bucket_size)
     if verify_threshold is not None:
         pairs = (
             pairs.join(
@@ -461,25 +447,7 @@ def canonical_docs(
             )
             .select("id1", "id2")
         )
-    comp = connected_components_edges(pairs, "id1", "id2")
-    assign = (
-        docs.select(F.col(id_col).alias("doc_id"))
-        .join(comp.withColumnRenamed("node", "doc_id"), "doc_id", "left_outer")
-        .select(
-            "doc_id",
-            F.coalesce("component", "doc_id").alias("cluster_id"),
-        )
-    )
-    sizes = assign.groupBy("cluster_id").agg(
-        F.count(F.lit(1)).cast("long").alias("cluster_size")
-    )
-    return assign.join(sizes, "cluster_id").select(
-        "doc_id",
-        "cluster_id",
-        "cluster_size",
-        # component label IS the cluster min, so canonical == label match
-        (F.col("doc_id") == F.col("cluster_id")).cast("int").alias("is_canonical"),
-    )
+    return canonical_clusters(docs.select(F.col(id_col).alias("doc_id")), pairs)
 
 
 def line_dedup(

@@ -10,8 +10,8 @@ two parties (Simulator.java:62). Metrics:
 * pairwise F1
 * reduction ratio: 1 - |candidates| / (|A| * |B|)
 
-Everything is computed with DataFrame joins/counts — no collects of data
-rows, only scalar aggregates cross the driver boundary.
+Everything is computed with DataFrame aggregates — no collects of data
+rows, only one row of scalar aggregates crosses the driver boundary.
 """
 
 from __future__ import annotations
@@ -46,9 +46,10 @@ def evaluate(
     n_bob: int,
     expected_matches: int,
 ) -> LinkageMetrics:
-    n_matches = matches.count()
-    n_candidates = candidates.count()
-    tp = matches.where(F.col("record1") == F.col("record2")).count()
+    # one action: two single-row aggregates cross-joined
+    n_matches, tp, n_candidates = matches.agg(
+        F.count(F.lit(1)), F.count(F.when(F.col("record1") == F.col("record2"), 1))
+    ).crossJoin(candidates.agg(F.count(F.lit(1)))).first()
     recall = tp / expected_matches if expected_matches else 0.0
     precision = tp / n_matches if n_matches else 0.0
     f1 = (

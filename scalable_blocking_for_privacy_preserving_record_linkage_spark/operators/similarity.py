@@ -23,6 +23,7 @@ from pyspark.sql import types as T
 
 from ..functions.vectors import cosine_expr
 from ..sources.io import ensure_parallelism
+from .clustering import canonical_clusters
 
 # above this list count, per-centroid plan literals would blow up the
 # expression tree; switch to an Arrow-batched numpy scorer over broadcast
@@ -454,30 +455,14 @@ def canonical_embeddings(
     ``is_canonical = 1`` yields the deduplicated embedding corpus.
 
     Scale shape matches canonical_docs: pair generation is the bucketed
-    self-join (never all-pairs), clustering shuffles only (node,
-    component) longs per round, and sizes come from a slim groupBy +
-    join, not a window.
+    self-join (never all-pairs), clustering shuffles only (child,
+    parent) longs per round, and sizes come from a slim groupBy + join,
+    not a window (both in ``clustering.canonical_clusters``).
     """
-    from .clustering import connected_components_edges
-
     pairs = lsh_near_pairs(
         vectors, dim, num_planes, threshold, seed, id_col, vec_col
     ).select("id1", "id2")
-    comp = connected_components_edges(pairs, "id1", "id2")
-    assign = (
-        vectors.select(F.col(id_col).alias("vec_id"))
-        .join(comp.withColumnRenamed("node", "vec_id"), "vec_id", "left_outer")
-        .select("vec_id", F.coalesce("component", "vec_id").alias("cluster_id"))
-    )
-    sizes = assign.groupBy("cluster_id").agg(
-        F.count(F.lit(1)).cast("long").alias("cluster_size")
-    )
-    return assign.join(sizes, "cluster_id").select(
-        "vec_id",
-        "cluster_id",
-        "cluster_size",
-        (F.col("vec_id") == F.col("cluster_id")).cast("int").alias("is_canonical"),
-    )
+    return canonical_clusters(vectors.select(F.col(id_col).alias("vec_id")), pairs)
 
 
 def lsh_bucket_topk(

@@ -10,16 +10,12 @@ adaptive rule is exactly equivalent to: *pair each element with its
 scan continues while ``steps <= W + same_seen - 2``, and steps =
 same_seen + opp_seen, so it stops once ``opp_seen = W - 1``).
 
-That equivalence admits two implementations, both here:
-
-* ``candidate_pairs`` (DEFAULT) — pure Catalyst: one window pass computes
-  each element's rank and opposite-predecessor count, then a BANDED
-  equi-join (bucket = party-rank / (W-1), each looker probes ≤2 buckets)
-  resolves the per-element range. Whole-stage codegen end to end, no
-  Python, and the blockID window reuses the purge stage's exchange.
-* ``candidate_pairs_kernel`` — the vectorized numpy kernel inside
-  ``applyInPandas`` (grouped by blockID). Kept as the executable
-  specification; tests assert both produce identical pair sets.
+``candidate_pairs`` implements it in pure Catalyst: one window pass
+computes each element's rank and opposite-predecessor count, then a BANDED
+equi-join (bucket = party-rank / (W-1), each looker probes ≤2 buckets)
+resolves the per-element range. Whole-stage codegen end to end, no Python,
+and the blockID window reuses the purge stage's exchange. Its executable
+specification, a numpy kernel per block, is ``tests/window_kernel.py``.
 
 Pairs are emitted Alice-first (record1 = Alice id, record2 = Bob id,
 MetaBlocking.java:64-68) and deduplicated across blocks
@@ -28,69 +24,12 @@ MetaBlocking.java:64-68) and deduplicated across blocks
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import PPRLConfig
 
 _PAIR_SCHEMA = "record1 string, record2 string"
-
-
-def _window_pairs_block(pdf: pd.DataFrame, w: int) -> pd.DataFrame:
-    # total order (score, party, recordID) — deterministic stand-in for the
-    # reference's stable Bob-first tiebreak (SURVEY.md §2.6)
-    pdf = pdf.sort_values(["score", "party", "recordID"], kind="mergesort")
-    party = (pdf["party"].to_numpy() == "A")
-    ids = pdf["recordID"].to_numpy()
-    n = len(ids)
-    k = w - 1
-    if n < 2 or k <= 0:
-        return pd.DataFrame({"record1": [], "record2": []}, dtype=object)
-
-    out_r1: list[np.ndarray] = []
-    out_r2: list[np.ndarray] = []
-    pos_a = np.flatnonzero(party)        # sorted positions of Alice elements
-    pos_b = np.flatnonzero(~party)
-    for cur_pos, opp_pos, cur_is_a in ((pos_a, pos_b, True), (pos_b, pos_a, False)):
-        if len(cur_pos) == 0 or len(opp_pos) == 0:
-            continue
-        # for each current element, number of opposite elements strictly before
-        cnt = np.searchsorted(opp_pos, cur_pos)
-        take = np.minimum(cnt, k)
-        total = int(take.sum())
-        if total == 0:
-            continue
-        # flat indices into opp_pos: for element e, slice [cnt-take, cnt)
-        starts = np.repeat(cnt - take, take)
-        offs = np.arange(total) - np.repeat(np.cumsum(take) - take, take)
-        opp_idx = opp_pos[starts + offs]
-        cur_idx = np.repeat(cur_pos, take)
-        if cur_is_a:
-            out_r1.append(ids[cur_idx])
-            out_r2.append(ids[opp_idx])
-        else:
-            out_r1.append(ids[opp_idx])
-            out_r2.append(ids[cur_idx])
-    if not out_r1:
-        return pd.DataFrame({"record1": [], "record2": []}, dtype=object)
-    return pd.DataFrame(
-        {"record1": np.concatenate(out_r1), "record2": np.concatenate(out_r2)}
-    )
-
-
-def candidate_pairs_kernel(elements: DataFrame, cfg: PPRLConfig) -> DataFrame:
-    """applyInPandas reference implementation of the adaptive window —
-    kept as the semantic cross-check for the Catalyst plan (tests assert
-    both produce identical pair sets)."""
-    w = cfg.window_size
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _window_pairs_block(pdf, w)
-
-    pairs = elements.groupBy("blockID").applyInPandas(fn, schema=_PAIR_SCHEMA)
-    return pairs.dropDuplicates(["record1", "record2"])
 
 
 def candidate_edge_weights(elements: DataFrame, cfg: PPRLConfig) -> DataFrame:

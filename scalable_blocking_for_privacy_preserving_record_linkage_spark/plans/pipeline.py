@@ -30,6 +30,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from ..config import PPRLConfig
 from ..operators import blocking, classify, clustering, matching, window
@@ -64,20 +65,14 @@ def run_pipeline(
 
     normalized = ensure_parallelism(extract.normalize_records(records, cfg)).cache()
 
-    # the party-count job exists only to size the RS draw and the metrics
+    # the party-size action exists only to size the RS draw and the metrics
     # denominators — skip it entirely when the RS size is pinned and no
-    # metrics were requested (one less job on the e2e path)
-    n_alice = n_bob = db_size = 0
+    # metrics were requested (one less action on the e2e path)
+    n_alice = n_bob = expected = 0
     if cfg.rs_size_override is None or with_metrics:
-        party_counts = {
-            r["party"]: r["count"]
-            for r in normalized.groupBy("party").count().collect()
-        }
-        n_alice = party_counts.get("A", 0)
-        n_bob = party_counts.get("B", 0)
-        db_size = max(n_alice, n_bob)
+        n_alice, n_bob, expected = _party_sizes(normalized)
 
-    samples = classify.build_reference_samples(reference_sets, cfg, db_size)
+    samples = classify.build_reference_samples(reference_sets, cfg, max(n_alice, n_bob))
 
     # stateless wide classify: all 12 (attr, sample) cells in one projection
     # per record — no explode-then-regroup shuffle
@@ -119,12 +114,6 @@ def run_pipeline(
 
     metrics = None
     if with_metrics:
-        # expected matches = |ids on both sides| (ground truth: id equality,
-        # Simulator.java:62; the reference derives it as DB_SIZE*COMMON_RECORDS
-        # from its file construction, Conf.java:54-55)
-        a_ids = normalized.where("party = 'A'").select("id")
-        b_ids = normalized.where("party = 'B'").select("id")
-        expected = a_ids.intersect(b_ids).count()
         metrics = evaluate(matches, candidates, n_alice, n_bob, expected)
 
     return PipelineResult(
@@ -137,6 +126,21 @@ def run_pipeline(
         components=components,
         metrics=metrics,
     )
+
+
+def _party_sizes(records: DataFrame) -> tuple[int, int, int]:
+    """(|A|, |B|, expected matches) in one action. expected = |ids on both
+    sides| (ground truth: id equality, Simulator.java:62; the reference
+    derives it as DB_SIZE*COMMON_RECORDS from its file construction,
+    Conf.java:54-55)."""
+    per_id = records.groupBy("id").agg(
+        F.count(F.when(F.col("party") == "A", 1)).alias("a"),
+        F.count(F.when(F.col("party") == "B", 1)).alias("b"),
+    )
+    n_alice, n_bob, expected = per_id.agg(
+        F.sum("a"), F.sum("b"), F.count(F.when((F.col("a") > 0) & (F.col("b") > 0), 1))
+    ).first()
+    return n_alice or 0, n_bob or 0, expected
 
 
 def run_pipeline_from_pages(

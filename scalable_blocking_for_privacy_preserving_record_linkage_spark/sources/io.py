@@ -67,19 +67,24 @@ def write_checkpoint(
         "wall_sec": time.time() - t0,
         "completed": True,
     }
-    with open(os.path.join(path, MANIFEST), "w") as f:
+    # write-then-rename: a crash mid-write never leaves a truncated manifest
+    mpath = os.path.join(path, MANIFEST)
+    with open(mpath + ".tmp", "w") as f:
         json.dump(manifest, f, indent=2, sort_keys=True)
+    os.replace(mpath + ".tmp", mpath)
     return df.sparkSession.read.schema(df.schema).parquet(path)
 
 
 def read_checkpoint(
     spark: SparkSession, path: str, stage: str, params_hash: str
 ) -> DataFrame | None:
-    mpath = os.path.join(path, MANIFEST)
-    if not os.path.exists(mpath):
+    """The stage's checkpoint, or None (recompute) when there is no
+    readable manifest for this stage and config."""
+    try:
+        with open(os.path.join(path, MANIFEST)) as f:
+            manifest = json.load(f)
+    except (OSError, ValueError):
         return None
-    with open(mpath) as f:
-        manifest = json.load(f)
     if not manifest.get("completed") or manifest.get("params_hash") != params_hash:
         return None
     if manifest.get("stage") != stage:

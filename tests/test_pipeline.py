@@ -8,6 +8,8 @@ from pyspark.sql import functions as F
 
 from scalable_blocking_for_privacy_preserving_record_linkage_spark.config import PPRLConfig
 from scalable_blocking_for_privacy_preserving_record_linkage_spark.operators import clustering
+from scalable_blocking_for_privacy_preserving_record_linkage_spark.operators.evaluate import evaluate
+from scalable_blocking_for_privacy_preserving_record_linkage_spark.plans import pipeline
 from scalable_blocking_for_privacy_preserving_record_linkage_spark.plans.pipeline import (
     run_pipeline,
     run_pipeline_from_pages,
@@ -132,6 +134,64 @@ def test_write_checkpoint_runs_one_job(spark, tmp_path):
         manifest = json.load(f)
     assert manifest["rows"] == 100 and manifest["completed"]
     assert back.count() == 100
+
+
+def test_truncated_manifest_recomputes(spark, tmp_path):
+    """A manifest cut short (a crash mid-write) reads as "no checkpoint":
+    the rerun recomputes that stage and rewrites a whole manifest."""
+    cfg = PPRLConfig(rs_size_override=10, seed=5)
+    recs = fixtures.spark_records(spark, 150, overlap=0.5, seed=5)
+    rs = fixtures.spark_reference_sets(spark, seed=5)
+    d = str(tmp_path / "ckpt")
+    kw = dict(checkpoint_dir=d, with_clusters=False, with_metrics=False)
+    n1 = run_pipeline(spark, recs, rs, cfg, **kw).matches.count()
+    mpath = os.path.join(d, "matches", io.MANIFEST)
+    with open(mpath) as f:
+        text = f.read()
+    with open(mpath, "w") as f:
+        f.write(text[: len(text) // 2])
+    assert run_pipeline(spark, recs, rs, cfg, **kw).matches.count() == n1
+    with open(mpath) as f:
+        assert json.load(f)["completed"]
+
+
+def _jobs(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_evaluate_runs_one_action(spark):
+    """The three counts come from one collect: the two aggregates' map
+    stages plus its result stage (AQE runs each shuffle map stage as its
+    own job). Three count() actions run 6."""
+    matches = spark.range(1000).selectExpr(
+        "cast(id as string) record1", "cast(id % 7 as string) record2"
+    )
+    candidates = spark.range(5000).selectExpr(
+        "cast(id as string) record1", "cast(id as string) record2"
+    )
+    m, jobs = _jobs(
+        spark, "evaluate-one-action", lambda: evaluate(matches, candidates, 100, 100, 7)
+    )
+    assert (m.n_matches, m.true_positives, m.n_candidates) == (1000, 7, 5000)
+    assert jobs <= 4
+
+
+def test_party_sizes_one_action(spark):
+    """|A|, |B| and the id-equality ground truth from one aggregate, with
+    intersect's set semantics (duplicate and NULL ids count once)."""
+    recs = spark.createDataFrame(
+        [("1", "A"), ("1", "A"), ("1", "B"), ("2", "A"), ("3", "B"), (None, "A"), (None, "B")],
+        "id string, party string",
+    )
+    sizes, jobs = _jobs(spark, "party-sizes", lambda: pipeline._party_sizes(recs))
+    assert sizes == (4, 3, 2)
+    assert jobs <= 3
 
 
 def test_null_attrs_dropped(spark):

@@ -15,9 +15,7 @@ from scalable_blocking_for_privacy_preserving_record_linkage_spark.functions imp
 from scalable_blocking_for_privacy_preserving_record_linkage_spark.functions.strings import (
     levenshtein_batch,
 )
-from scalable_blocking_for_privacy_preserving_record_linkage_spark.operators.window import (
-    _window_pairs_block,
-)
+from window_kernel import window_pairs_block
 
 CFG = PPRLConfig()
 
@@ -82,7 +80,7 @@ def _pairs(elems, w):
             "score": [s for _, s in elems],
         }
     )
-    out = _window_pairs_block(pdf, w)
+    out = window_pairs_block(pdf, w)
     return set(zip(out["record1"], out["record2"]))
 
 
@@ -110,7 +108,7 @@ def test_window_invariant_under_row_order(elems, w, rnd):
             "score": [elems[i][1] for i in idx],
         }
     )
-    out = _window_pairs_block(pdf, w)
+    out = window_pairs_block(pdf, w)
     assert set(zip(out["record1"], out["record2"])) == base
 
 

@@ -7,10 +7,9 @@ import pytest
 
 from scalable_blocking_for_privacy_preserving_record_linkage_spark.config import PPRLConfig
 from scalable_blocking_for_privacy_preserving_record_linkage_spark.operators.window import (
-    _window_pairs_block,
     candidate_pairs,
-    candidate_pairs_kernel,
 )
+from window_kernel import candidate_pairs_kernel, window_pairs_block
 
 
 def _reference_loop(sorted_elems, w):
@@ -44,7 +43,7 @@ def _run_block(elems, w):
             "score": range(len(elems)),  # already in sorted order
         }
     )
-    out = _window_pairs_block(pdf, w)
+    out = window_pairs_block(pdf, w)
     return set(zip(out["record1"], out["record2"]))
 
 
