@@ -12,6 +12,7 @@ Notable divergences (all documented in SURVEY.md §2.8):
   config (Conf.java:33).
 * ``purge_max_block_size`` adds meta-blocking block purging (north-star
   requirement; the reference has none — hot blocks land on a single task).
+  ``None`` lifts the cap; blocks must still hold both parties.
 """
 
 from __future__ import annotations
@@ -49,7 +50,9 @@ class PPRLConfig:
     # on p% of a web-scale corpus before committing the full job.
     sample_fraction: float | None = None
     rs_size_override: int | None = None          # explicit RS_SIZE, else fraction
-    purge_max_block_size: int | None = 500       # drop blocks with more elements
+    # drop blocks with more elements; None = no size cap (the same
+    # groupBy + left_semi purge still drops single-party blocks)
+    purge_max_block_size: int | None = 500
     # hint the two pairs×blooms attach-joins to broadcast the bloom side.
     # Correct ONLY when the encoded party tables fit an executor (single-
     # node / bench scale); at cluster scale leave False — the blooms are

@@ -12,8 +12,8 @@
 
 * ``purge_blocks`` is the meta-blocking block-purge the north star requires
   (the reference has only the implicit both-parties purge of its inner join,
-  ReferenceSetBlocking.java:120-122). It is computed as a slim
-  count-aggregate + semi-join so hot blockIDs (duplicate boilerplate pages)
+  ReferenceSetBlocking.java:120-122). It is one plan: a slim
+  count-aggregate + semi-join, so hot blockIDs (duplicate boilerplate pages)
   are dropped BEFORE any wide rows or arrays materialize — this is the skew
   guard for the 10^12-scale shuffle.
 
@@ -71,50 +71,24 @@ def block_ids_from_arrays(classified_wide: DataFrame, cfg: PPRLConfig) -> DataFr
     )
 
 
-def purge_blocks(
-    elements: DataFrame,
-    cfg: PPRLConfig,
-    require_both_parties: bool = True,
-) -> DataFrame:
+def purge_blocks(elements: DataFrame, cfg: PPRLConfig) -> DataFrame:
     """Keep only useful blocks: present in both parties (the reference's
     inner-join semantics, ReferenceSetBlocking.java:120-122) and, when
     ``cfg.purge_max_block_size`` is set, not oversized (skew guard).
 
-    Two physical strategies, chosen by whether a size cap is active:
-
-    * cap set — a SLIM groupBy(blockID) count aggregate (partial map-side
-      combine, never co-locates a block's rows) computes keep-verdicts,
-      applied with a left_semi join (AQE broadcasts the verdict side when
-      small). A degenerate hot block — exactly what the cap guards
-      against — is dropped WITHOUT ever funneling its rows into one task,
-      which a window aggregate would force.
-    * no cap — every block survives size-wise, so hot blocks flow
-      downstream regardless; the unbounded window aggregate is then the
-      better plan (one shuffle, and its hash(blockID) exchange is reused
-      by the candidate stage's windows).
+    A SLIM groupBy(blockID) count aggregate (partial map-side combine,
+    never co-locates a block's rows) computes the keep-verdicts, applied
+    with a left_semi join (AQE broadcasts the verdict side when small). A
+    degenerate hot block — exactly what the cap guards against — is
+    dropped WITHOUT ever funneling its rows into one task, which a window
+    aggregate would force.
     """
+    stats = elements.groupBy("blockID").agg(
+        F.sum(F.when(F.col("party") == "A", 1).otherwise(0)).alias("_nA"),
+        F.sum(F.when(F.col("party") == "B", 1).otherwise(0)).alias("_nB"),
+    )
+    cond = (F.col("_nA") > 0) & (F.col("_nB") > 0)
     if cfg.purge_max_block_size is not None:
-        stats = elements.groupBy("blockID").agg(
-            F.sum(F.when(F.col("party") == "A", 1).otherwise(0)).alias("_nA"),
-            F.sum(F.when(F.col("party") == "B", 1).otherwise(0)).alias("_nB"),
-        )
-        cond = (F.col("_nA") + F.col("_nB")) <= cfg.purge_max_block_size
-        if require_both_parties:
-            cond = cond & (F.col("_nA") > 0) & (F.col("_nB") > 0)
-        keep = stats.where(cond).select("blockID")
-        return elements.join(keep, "blockID", "left_semi")
-
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy("blockID").rowsBetween(
-        W.unboundedPreceding, W.unboundedFollowing
-    )
-    counted = elements.withColumn(
-        "_nA", F.sum(F.when(F.col("party") == "A", 1).otherwise(0)).over(w)
-    ).withColumn(
-        "_nB", F.sum(F.when(F.col("party") == "B", 1).otherwise(0)).over(w)
-    )
-    cond = F.lit(True)
-    if require_both_parties:
-        cond = cond & (F.col("_nA") > 0) & (F.col("_nB") > 0)
-    return counted.where(cond).drop("_nA", "_nB")
+        cond = cond & ((F.col("_nA") + F.col("_nB")) <= cfg.purge_max_block_size)
+    keep = stats.where(cond).select("blockID")
+    return elements.join(keep, "blockID", "left_semi")

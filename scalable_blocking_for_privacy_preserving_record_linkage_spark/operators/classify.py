@@ -6,10 +6,14 @@ rewrites for scale (SURVEY.md §2.5/§4.2):
 
 * The reference runs 12 separate ``map`` stages (3 attrs × 4 samples),
   unions them and regroups by record (ReferenceSetBlocking.java:28-68).
-  ``classify_wide`` runs ONE projection instead: every (attribute, sample)
-  cell of a record is classified by the same pandas UDF inside a single
-  array column, ordered by sample index ``s``. No explode, no shuffle, so
-  the batch pipeline, the streaming jobs and ``__spark_entry__`` share it
+  ``classify_wide`` runs ONE projection instead, with ONE pandas-UDF call
+  per record over its blocking attributes (``cells_expr``). The UDF
+  classifies each attribute's distinct values against that attribute's
+  samples and returns the record's cells as two (rows × cells) matrices,
+  ``classID`` and ``score``; Catalyst zips them into one array ordered by
+  sample index ``s``, which it takes from the array position, so ``s``
+  never crosses the Arrow boundary. No explode, no shuffle, so the batch
+  pipeline, the streaming jobs and ``__spark_entry__`` share it
   unchanged (``blocking.block_ids_from_arrays`` pairs the array next).
 * The driver-side ``SecureRandom`` Durstenfeld shuffle
   (DurstenfeldShuffle.java:8-26) is replaced by a SEEDED hash permutation:
@@ -31,7 +35,7 @@ import hashlib
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -81,61 +85,78 @@ def build_reference_samples(
     return samples
 
 
-def make_classify_udf(
-    spark: SparkSession,
-    samples: dict[int, np.ndarray],
-    cfg: PPRLConfig,
-):
-    """Build the vectorized (s, value) -> (classID, score) pandas UDF with
-    the sorted samples broadcast once. ``classify_cells_expr`` calls it
-    once per (attribute, sample) cell."""
+def _classify_values(
+    values: np.ndarray, rs: np.ndarray, s: int, nsc: int
+) -> tuple[np.ndarray, np.ndarray]:
+    """(classID, score) of each value against the sorted sample ``rs`` —
+    one ``classifyBlockingAttribute`` call per value
+    (ReferenceSetBlocking.java:151-184)."""
+    pos = prefix_binary_search_batch(rs, values, nsc, len(rs))
+    d2 = levenshtein_batch(values, rs[pos])
+    # d1 only when pos-1 > 0 (STRICT: index 0 never considered,
+    # ReferenceSetBlocking.java:169)
+    has_d1 = pos - 1 > 0
+    d1 = np.full(len(values), 1_000_000, dtype=np.int64)
+    if has_d1.any():
+        d1[has_d1] = levenshtein_batch(values[has_d1], rs[pos[has_d1] - 1])
+    use_d1 = d1 < d2
+    cls_pos = np.where(use_d1, pos, pos + 1)
+    class_ids = np.array([f"S{s}.{p}" for p in cls_pos], dtype=object)
+    return class_ids, np.where(use_d1, d1, d2).astype(np.int32)
+
+
+def cells_expr(
+    spark: SparkSession, samples: dict[int, np.ndarray], cfg: PPRLConfig
+) -> Column:
+    """``array<struct<s:int, classID:string, score:int>>`` over the record's
+    ``cfg.blocking_attrs`` columns: every (attribute, sample) cell, ordered
+    by ``s``, from ONE pandas-UDF call per record. Usable inside any
+    projection (``classify_wide``, the streaming enriched select).
+
+    The sorted samples are broadcast once. In each Arrow batch the UDF
+    classifies every attribute's DISTINCT values once per sample (names
+    and cities repeat heavily) and returns the cells as a struct of two
+    ``array`` columns built from (rows × cells) matrices: an
+    ``array<struct>`` result would be converted cell by cell into Python
+    dicts on the way out."""
     bc = spark.sparkContext.broadcast(
         {s: np.asarray(v, dtype=object) for s, v in samples.items()}
     )
-    nsc = cfg.num_search_chars
+    nsc, k = cfg.num_search_chars, cfg.num_samples
 
     out_type = T.StructType(
         [
-            T.StructField("classID", T.StringType()),
-            T.StructField("score", T.IntegerType()),
+            T.StructField("classID", T.ArrayType(T.StringType())),
+            T.StructField("score", T.ArrayType(T.IntegerType())),
         ]
     )
 
     @F.pandas_udf(out_type)
-    def _classify(s_col: pd.Series, values: pd.Series) -> pd.DataFrame:
-        class_out = np.empty(len(values), dtype=object)
-        score_out = np.zeros(len(values), dtype=np.int64)
-        sample_map = bc.value
-        for s in pd.unique(s_col):
-            rs = sample_map[int(s)]
-            n = len(rs)
-            mask = (s_col == s).to_numpy()
-            vals = values[mask]
-            # classify each DISTINCT value once (names/cities repeat heavily)
-            uniq = pd.unique(vals)
+    def _classify(*attrs: pd.Series) -> pd.DataFrame:
+        class_ids, scores = [], []
+        for a, values in enumerate(attrs):
+            if values.isna().any():
+                raise ValueError("classify needs normalized records: NULL attribute")
+            codes, uniq = pd.factorize(values)
             uq = np.asarray(uniq, dtype=object)
-            pos = prefix_binary_search_batch(rs, uq, nsc, n)
-            d2 = levenshtein_batch(uq, rs[pos])
-            # d1 only when pos-1 > 0 (STRICT: index 0 never considered,
-            # ReferenceSetBlocking.java:169)
-            has_d1 = pos - 1 > 0
-            d1 = np.full(len(uq), 1_000_000, dtype=np.int64)
-            if has_d1.any():
-                d1[has_d1] = levenshtein_batch(uq[has_d1], rs[pos[has_d1] - 1])
-            use_d1 = d1 < d2
-            cls_pos = np.where(use_d1, pos, pos + 1)
-            score = np.where(use_d1, d1, d2)
-            prefix = f"S{int(s)}."
-            table = {
-                v: (prefix + str(int(p)), int(sc))
-                for v, p, sc in zip(uniq, cls_pos, score)
+            for s in range(a * k + 1, (a + 1) * k + 1):
+                c, sc = _classify_values(uq, bc.value[s], s, nsc)
+                class_ids.append(c[codes])
+                scores.append(sc[codes])
+        return pd.DataFrame(
+            {
+                "classID": np.column_stack(class_ids).tolist(),
+                "score": np.column_stack(scores).tolist(),
             }
-            mapped = vals.map(table)
-            class_out[mask] = [t[0] for t in mapped]
-            score_out[mask] = [t[1] for t in mapped]
-        return pd.DataFrame({"classID": class_out, "score": score_out})
+        )
 
-    return _classify
+    cells = _classify(*[F.col(a).cast("string") for a in cfg.blocking_attrs])
+    return F.transform(
+        F.arrays_zip(cells["classID"], cells["score"]),
+        lambda c, i: F.struct(
+            (i + 1).alias("s"), c["classID"].alias("classID"), c["score"].alias("score")
+        ),
+    )
 
 
 def classify_wide(
@@ -148,33 +169,15 @@ def classify_wide(
     per record — no explode, no groupBy, so it lifts to Structured
     Streaming append mode unchanged (streaming/jobs.py).
 
+    ``records`` must be normalized (``extract.normalize_records``); a NULL
+    attribute raises inside the UDF.
+
     Output: (recordID, party, arr: array<struct<s:int, classID, score>>),
     arr ordered by s, classID = ``"S{s}.{pos}"`` exactly as
     ReferenceSetBlocking.java:176,180.
     """
-    _classify = make_classify_udf(spark, samples, cfg)
     return records.select(
         F.col(cfg.id_col).cast("string").alias("recordID"),
         "party",
-        classify_cells_expr(_classify, cfg).alias("arr"),
+        cells_expr(spark, samples, cfg).alias("arr"),
     )
-
-
-def classify_cells_expr(classify_udf, cfg: PPRLConfig):
-    """array<struct<s, classID, score>> expression over the record's
-    attribute columns — the wide-classify core, reusable inside any
-    projection (e.g. the streaming enriched select)."""
-    cells = []
-    s = 1
-    for attr in cfg.blocking_attrs:
-        for _ in range(cfg.num_samples):
-            c = classify_udf(F.lit(s).cast("int"), F.col(attr).cast("string"))
-            cells.append(
-                F.struct(
-                    F.lit(s).cast("int").alias("s"),
-                    c["classID"].alias("classID"),
-                    c["score"].alias("score"),
-                )
-            )
-            s += 1
-    return F.array(*cells)

@@ -4,9 +4,10 @@ Spark-first).
 
 Stage graph (shuffles annotated; compare the reference's six, SURVEY.md §3):
 
-  records ──(normalize: narrow)──► classify_wide (pandas UDF, all 12
-          cells in one projection: narrow) ──► block_ids explode (narrow)
-          ──(window purge + ranks on blockID: SHUFFLE 1, shared exchange)
+  records ──(normalize: narrow)──► classify_wide (ONE pandas-UDF call
+          per record returns all 12 cells: narrow) ──► block_ids explode
+          (narrow) ──(purge: slim groupBy(blockID) verdicts + left_semi,
+          window ranks on blockID: SHUFFLE 1 on hash(blockID))
           ──(banded range-join: SHUFFLE 2)──► candidate pairs
           ──(distinct: SHUFFLE 3)
           ──(join blooms ×2: SHUFFLES 4,5)──► matches (codegen Dice filter)
@@ -15,7 +16,7 @@ Stage graph (shuffles annotated; compare the reference's six, SURVEY.md §3):
 The reference's 12-way classify-union + groupBy(recordID) regroup
 collapses into the stateless wide classify (no shuffle at all before
 block formation), its two per-party block groupBys + inner join collapse
-into one shared-exchange window purge, and its per-row sorted-
+into one slim count-aggregate purge, and its per-row sorted-
 neighborhood loop becomes a codegen banded range-join — five shuffles on
 slimmer rows versus the reference's six on wider ones, with no Python in
 the per-pair path.
@@ -74,8 +75,8 @@ def run_pipeline(
 
     samples = classify.build_reference_samples(reference_sets, cfg, max(n_alice, n_bob))
 
-    # stateless wide classify: all 12 (attr, sample) cells in one projection
-    # per record — no explode-then-regroup shuffle
+    # stateless wide classify: all 12 (attr, sample) cells from one UDF
+    # call per record — no explode-then-regroup shuffle
     classified = checkpoint_stage(
         lambda: classify.classify_wide(spark, normalized, samples, cfg),
         spark, checkpoint_dir, "classified", ph,

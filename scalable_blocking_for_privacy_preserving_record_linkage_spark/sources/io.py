@@ -4,8 +4,9 @@ The reference persists inputs DISK_ONLY and caches intermediates
 (Simulator.java:42-50); at 10^12 scale the north star requires durable
 checkpoints with per-partition lineage and resumability. Each stage writes
 Parquet plus a ``_MANIFEST.json`` carrying the stage name, the config hash,
-the row count and the wall time. A rerun with the same config hash reads
-the checkpoint instead of recomputing.
+the row count, the wall time and the stage's schema. A rerun with the same
+config hash reads the checkpoint, with that schema, instead of recomputing;
+a fresh write rereads through the same path.
 
 Iceberg is the production target (``writeTo(...).append()``); this
 container has no Iceberg runtime, so the writer is format-pluggable and
@@ -20,6 +21,7 @@ import time
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 MANIFEST = "_MANIFEST.json"
 
@@ -55,8 +57,8 @@ def write_checkpoint(
     params_hash: str,
 ) -> DataFrame:
     """Write ``df`` as the stage's Parquet checkpoint plus its manifest in
-    one job: the row count is observed during the write, and the reread
-    takes ``df``'s schema instead of inferring it from the files."""
+    one job (the row count is observed during the write), and reread it
+    as ``read_checkpoint`` does, with ``df``'s schema from the manifest."""
     t0 = time.time()
     rows = Observation()
     df.observe(rows, F.count(F.lit(1)).alias("rows")).write.mode("overwrite").parquet(path)
@@ -65,6 +67,7 @@ def write_checkpoint(
         "params_hash": params_hash,
         "rows": int(rows.get["rows"]),
         "wall_sec": time.time() - t0,
+        "schema": df.schema.json(),
         "completed": True,
     }
     # write-then-rename: a crash mid-write never leaves a truncated manifest
@@ -72,24 +75,26 @@ def write_checkpoint(
     with open(mpath + ".tmp", "w") as f:
         json.dump(manifest, f, indent=2, sort_keys=True)
     os.replace(mpath + ".tmp", mpath)
-    return df.sparkSession.read.schema(df.schema).parquet(path)
+    return read_checkpoint(df.sparkSession, path, stage, params_hash)
 
 
 def read_checkpoint(
     spark: SparkSession, path: str, stage: str, params_hash: str
 ) -> DataFrame | None:
-    """The stage's checkpoint, or None (recompute) when there is no
-    readable manifest for this stage and config."""
+    """The stage's checkpoint, read with the schema its manifest records
+    (no inference, no job), or None (recompute) when there is no readable
+    manifest with a schema for this stage and config."""
     try:
         with open(os.path.join(path, MANIFEST)) as f:
             manifest = json.load(f)
-    except (OSError, ValueError):
+        schema = T.StructType.fromJson(json.loads(manifest["schema"]))
+    except (OSError, ValueError, KeyError, TypeError):
         return None
     if not manifest.get("completed") or manifest.get("params_hash") != params_hash:
         return None
     if manifest.get("stage") != stage:
         return None
-    return spark.read.parquet(path)
+    return spark.read.schema(schema).parquet(path)
 
 
 def checkpoint_stage(

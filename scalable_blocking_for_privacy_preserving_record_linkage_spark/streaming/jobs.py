@@ -3,9 +3,11 @@
 The reference is pure batch (SURVEY.md §2.9 — no streaming of any kind);
 these are the engine's forward extensions for continuous pipelines, built
 on ``readStream``/``writeStream`` so every transformation below is the
-SAME DataFrame code the batch pipeline uses — classification, Bloom
-encoding and block assignment are stateless per record, so they lift to
-streams unchanged (the Spark unified-batch-streaming contract).
+SAME DataFrame code the batch pipeline uses — normalization,
+classification, Bloom encoding and block assignment are stateless per
+record, so they lift to streams unchanged (the Spark unified-batch-
+streaming contract). The three PPRL jobs normalize their records with
+``extract.normalize_records`` first, exactly as ``run_pipeline`` does.
 
 * ``stream_records(...)``      — file-source stream of party records
 * ``encode_stream(...)``       — incremental Bloom encoding of new records
@@ -31,6 +33,7 @@ from pyspark.sql import functions as F
 
 from ..config import PPRLConfig
 from ..operators import blocking, classify, matching
+from ..sources.extract import normalize_records
 
 RECORD_SCHEMA = "id string, surname string, name string, city string, party string"
 
@@ -49,7 +52,7 @@ def stream_records(
 def encode_stream(records: DataFrame, cfg: PPRLConfig) -> DataFrame:
     """Incremental Bloom encoding — the batch encoder applied to a stream
     (stateless pandas UDF; one Arrow batch per micro-batch partition)."""
-    return matching.encode_blooms(records, cfg)
+    return matching.encode_blooms(normalize_records(records, cfg), cfg)
 
 
 def classify_stream(
@@ -62,7 +65,7 @@ def classify_stream(
     in streaming append mode with no state store.
     """
     spark = records.sparkSession
-    wide = classify.classify_wide(spark, records, samples, cfg)
+    wide = classify.classify_wide(spark, normalize_records(records, cfg), samples, cfg)
     return blocking.block_ids_from_arrays(wide, cfg)
 
 
@@ -91,14 +94,13 @@ def match_stream_against(
 
     n = cfg.num_attrs
     spark = incoming.sparkSession
-    b = incoming.where(F.col("party") == "B")
+    b = normalize_records(incoming, cfg).where(F.col("party") == "B")
 
-    classify_udf = classify.make_classify_udf(spark, samples, cfg)
     enriched = matching.with_blooms(
         b,
         [
-            F.col(cfg.id_col).cast("string").alias("record2"),
-            classify.classify_cells_expr(classify_udf, cfg).alias("arr"),
+            F.col(cfg.id_col).alias("record2"),
+            classify.cells_expr(spark, samples, cfg).alias("arr"),
         ],
         cfg,
         side="B",

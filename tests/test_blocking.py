@@ -1,5 +1,7 @@
 """Block-ID cyclic pairing (D2) and block purge semantics."""
 
+import pytest
+
 from scalable_blocking_for_privacy_preserving_record_linkage_spark.config import PPRLConfig
 from scalable_blocking_for_privacy_preserving_record_linkage_spark.operators import blocking
 
@@ -40,13 +42,15 @@ def _elements(spark, rows):
     )
 
 
-def test_purge_requires_both_parties(spark):
+@pytest.mark.parametrize("cap", [None, 500])
+def test_purge_requires_both_parties(spark, cap):
     rows = [
         ("b1", "x", "A", 1),
         ("b1", "y", "B", 1),
         ("b2", "z", "A", 1),  # Alice-only block -> dropped (J1 semantics)
     ]
-    out = blocking.purge_blocks(_elements(spark, rows), CFG)
+    cfg = PPRLConfig(purge_max_block_size=cap)
+    out = blocking.purge_blocks(_elements(spark, rows), cfg)
     assert {r["blockID"] for r in out.collect()} == {"b1"}
 
 

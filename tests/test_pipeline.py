@@ -155,6 +155,38 @@ def test_truncated_manifest_recomputes(spark, tmp_path):
         assert json.load(f)["completed"]
 
 
+def test_resume_reads_manifest_schema_without_jobs(spark, tmp_path):
+    """A resumed stage rereads with the schema its manifest records: the
+    same schema as the fresh run's, and no Spark job beyond the read
+    itself (no footer inference). A manifest without a schema reads as
+    "no checkpoint"."""
+    df = spark.range(20).selectExpr(
+        "cast(id as string) AS recordID",
+        "array(named_struct('s', cast(id as int), 'classID', 'S1.1', 'score', 2)) AS arr",
+    )
+    d = str(tmp_path / "ckpt")
+    fresh = io.checkpoint_stage(lambda: df, spark, d, "classified", "h")
+
+    def recompute():
+        raise AssertionError("a completed stage was recomputed")
+
+    resumed, n_jobs = _jobs(
+        spark, "resume-no-job",
+        lambda: io.checkpoint_stage(recompute, spark, d, "classified", "h"),
+    )
+    assert n_jobs == 0
+    assert resumed.schema == fresh.schema
+    assert sorted(resumed.collect()) == sorted(df.collect())
+
+    mpath = os.path.join(d, "classified", io.MANIFEST)
+    with open(mpath) as f:
+        manifest = json.load(f)
+    del manifest["schema"]
+    with open(mpath, "w") as f:
+        json.dump(manifest, f)
+    assert io.read_checkpoint(spark, os.path.join(d, "classified"), "classified", "h") is None
+
+
 def _jobs(spark, group, fn):
     sc = spark.sparkContext
     sc.setJobGroup(group, group)

@@ -4,20 +4,27 @@ must be visible in .explain output, not assumed.
 * predicate pushdown + column pruning reach the parquet scan
 * the Dice matching path contains NO Python evaluation (pure codegen)
 * the candidate generator contains NO Python evaluation
+* classify is ONE Python call per record, and the stream side evaluates it
+  with the CLK encoders in one Python node
 * broadcast join is chosen for the small dimension side
 """
 
 from __future__ import annotations
 
+import re
+
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from scalable_blocking_for_privacy_preserving_record_linkage_spark.config import PPRLConfig
 from scalable_blocking_for_privacy_preserving_record_linkage_spark.operators import (
+    classify,
     matching,
     window,
 )
 from scalable_blocking_for_privacy_preserving_record_linkage_spark.sources import fixtures
+from scalable_blocking_for_privacy_preserving_record_linkage_spark.streaming import jobs
 
 SF = "/root/testdata/sf0.001"
 
@@ -78,6 +85,50 @@ def test_candidate_generation_is_pure_catalyst(spark):
     # window ranks + a join resolve the neighborhood — all JVM operators
     # (AQE prints the pre-final plan, so codegen spans aren't labeled yet)
     assert "row_number()" in plan and "Join" in plan
+
+
+def _python_nodes(plan: str) -> list[str]:
+    """The ArrowEvalPython lines of a plan: each lists its UDF calls, then
+    one ``pythonUDF<n>`` output per call."""
+    return [ln for ln in plan.splitlines() if "ArrowEvalPython" in ln]
+
+
+def _classify_inputs(spark, cfg):
+    records = fixtures.spark_records(spark, 40, seed=3)
+    samples = {
+        s: np.array(sorted(["ANNA", "BERT", "CARL", "DORA"]), dtype=object)
+        for s in range(1, cfg.num_attrs * cfg.num_samples + 1)
+    }
+    return records, samples
+
+
+def test_classify_is_one_python_call(spark):
+    """All (attribute, sample) cells of a record come from ONE Python UDF
+    call; the sample index ``s`` is added by Catalyst, not shipped."""
+    cfg = PPRLConfig(rs_size_override=5)
+    records, samples = _classify_inputs(spark, cfg)
+    nodes = _python_nodes(plan_of(classify.classify_wide(spark, records, samples, cfg)))
+    assert len(nodes) == 1
+    assert len(re.findall(r"pythonUDF\d+#", nodes[0])) == 1, nodes[0]
+
+
+def test_match_stream_side_one_python_node(spark):
+    """The stream side of the stream-static matcher evaluates classify and
+    the three CLK encoders in ONE ArrowEvalPython node (one Arrow round
+    trip per micro-batch partition)."""
+    cfg = PPRLConfig(rs_size_override=5)
+    records, samples = _classify_inputs(spark, cfg)
+    static_elements = spark.createDataFrame(
+        [("S1.1-S2.1", "R0000001", "A", 0)],
+        "blockID string, recordID string, party string, score int",
+    )
+    matched = jobs.match_stream_against(
+        records, static_elements, matching.encode_blooms(records, cfg), samples, cfg
+    )
+    stream_side = [n for n in _python_nodes(plan_of(matched)) if "_classify(" in n]
+    assert len(stream_side) == 1
+    node = stream_side[0]
+    assert node.count("_classify(") == 1 and node.count("_encode(") == cfg.num_attrs, node
 
 
 def test_small_dim_join_broadcasts(spark):

@@ -20,7 +20,10 @@ from scalable_blocking_for_privacy_preserving_record_linkage_spark.operators imp
     classify,
     matching,
 )
-from scalable_blocking_for_privacy_preserving_record_linkage_spark.sources import fixtures
+from scalable_blocking_for_privacy_preserving_record_linkage_spark.sources import (
+    extract,
+    fixtures,
+)
 from scalable_blocking_for_privacy_preserving_record_linkage_spark.streaming import jobs
 
 CFG = PPRLConfig(rs_size_override=10, purge_max_block_size=500)
@@ -80,6 +83,16 @@ def test_classify_stream_matches_batch(spark, record_dir):
     assert g == w and len(g) > 0
 
 
+def _stream_static_oracle(static_elements, static_blooms, cfg):
+    """Batch oracle of ``match_stream_against``: the same candidate rule
+    (B and A share a block, no window) + Dice, as sorted (record1, record2)."""
+    a_side = static_elements.where("party='A'").select("blockID", F.col("recordID").alias("record1"))
+    b_side = static_elements.where("party='B'").select("blockID", F.col("recordID").alias("record2"))
+    cand = b_side.join(a_side, "blockID").select("record1", "record2").dropDuplicates(["record1", "record2"])
+    want = matching.match_candidates(cand, static_blooms, cfg).select("record1", "record2")
+    return sorted(map(tuple, want.collect()))
+
+
 @pytest.mark.parametrize("layout", ["dense", "sparse"])
 def test_match_stream_against_static(spark, record_dir, layout):
     """New B-party records arriving as a stream match the static A index
@@ -106,15 +119,41 @@ def test_match_stream_against_static(spark, record_dir, layout):
     _run_stream(matched.select("record1", "record2", "matched_fields"), sink)
     got = spark.sql(f"select record1, record2 from {sink}")
 
-    # batch oracle: same candidate rule (shared block, no window) + Dice
-    a_side = static_elements.where("party='A'").select("blockID", F.col("recordID").alias("record1"))
-    b_side = static_elements.where("party='B'").select("blockID", F.col("recordID").alias("record2"))
-    cand = b_side.join(a_side, "blockID").select("record1", "record2").dropDuplicates(["record1", "record2"])
-    want = matching.match_candidates(cand, static_blooms, cfg).select("record1", "record2")
+    w = _stream_static_oracle(static_elements, static_blooms, cfg)
+    assert sorted(map(tuple, got.collect())) == w and len(w) > 0
 
-    g = sorted(map(tuple, got.collect()))
-    w = sorted(map(tuple, want.collect()))
-    assert g == w and len(g) > 0
+
+def test_match_stream_normalizes_like_batch(spark, record_dir, tmp_path):
+    """Messy B records (lower-cased, padded, one NULL attribute) arriving
+    as a stream match the static A index exactly as the batch pipeline
+    matches them after ``normalize_records``."""
+    batch_records = extract.normalize_records(spark.read.parquet(record_dir), CFG)
+    samples = classify.build_reference_samples(
+        fixtures.spark_reference_sets(spark), CFG, batch_records.count()
+    )
+    static_elements = blocking.block_ids_from_arrays(
+        classify.classify_wide(spark, batch_records, samples, CFG), CFG
+    )
+    static_blooms = matching.encode_blooms(batch_records, CFG)
+
+    messy_dir = str(tmp_path / "messy")
+    messy = batch_records.where("party='B'").select(
+        "id",
+        F.concat(F.lit("  "), F.lower("surname"), F.lit(" ")).alias("surname"),
+        F.lower("name").alias("name"),
+        "city",
+        "party",
+    )
+    null_city = spark.createDataFrame([("NULLCITY", "SMITH", "JOHN", None, "B")], jobs.RECORD_SCHEMA)
+    messy.unionByName(null_city).repartition(3).write.parquet(messy_dir)
+
+    stream = jobs.stream_records(spark, messy_dir, max_files_per_trigger=2)
+    matched = jobs.match_stream_against(stream, static_elements, static_blooms, samples, CFG)
+    _run_stream(matched.select("record1", "record2"), "match_stream_messy")
+    got = spark.sql("select record1, record2 from match_stream_messy")
+
+    w = _stream_static_oracle(static_elements, static_blooms, CFG)
+    assert sorted(map(tuple, got.collect())) == w and len(w) > 0
 
 
 def test_windowed_event_counts_stream_vs_batch(spark, tmp_path):
