@@ -134,7 +134,7 @@ def _q_pages_text_invariant(spark, sf_dir):
 
 def _pprl_blocked(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     """``run_pipeline``'s classify and blocking stages over the
-    documents-derived parties: (classify_wide output, purged block
+    documents-derived parties: (classified cells, purged block
     elements)."""
     records = _pprl_records(spark, sf_dir)
     rs = testdata.reference_sets_from_records(records, CFG)
@@ -173,14 +173,13 @@ def _q_pprl_edge_weights(spark, sf_dir):
 
 
 def _q_pprl_pruned_candidates(spark, sf_dir):
-    """Meta-blocking WEIGHTED pruning path (MetaBlocking.java:93-119
+    """Meta-blocking WEIGHTED pruning (MetaBlocking.java:93-119
     semantics, extended with the CBS threshold): keep only candidate
-    pairs co-occurring in >= 2 distinct blocks. Exercises the weighted
-    branch of window.candidate_pairs under the value oracle (the default
-    driver pipeline takes the slim unweighted branch)."""
+    pairs co-occurring in >= 2 distinct blocks, a filter on
+    window.candidate_edge_weights under the value oracle."""
     _, elements = _pprl_blocked(spark, sf_dir)
-    cfg2 = dataclasses.replace(CFG, min_cbs_weight=2)
-    return window.candidate_pairs(elements, cfg2)
+    w = window.candidate_edge_weights(elements, CFG)
+    return w.where(F.col("cbs_weight") >= 2).select("record1", "record2")
 
 
 def _q_pprl_candidates(spark, sf_dir):

@@ -130,7 +130,8 @@ def _load_party_csv(
     db_size: int | None,
     sample_fraction: float | None,
 ) -> DataFrame:
-    """SQLData's positional CSV projection + null filter + limit/sample.
+    """SQLData's positional CSV projection + limit/sample; the null
+    filter is ``run_pipeline``'s normalization (SQLData.java:53-62).
 
     Reference parity (SQLData.java:21-29): limit(DB_SIZE) applies
     UNCONDITIONALLY there (the .sample call is dormant), so when both a
@@ -147,12 +148,7 @@ def _load_party_csv(
         F.col(c).alias(a)
         for c, a in zip(positional[1 : 1 + cfg.num_attrs], cfg.blocking_attrs)
     ]
-    df = df.select(*cols, F.lit(party).alias("party"))
-    cond = None
-    for a in cfg.blocking_attrs:
-        c = F.col(a).isNotNull()
-        cond = c if cond is None else cond & c
-    return df.where(cond)
+    return df.select(*cols, F.lit(party).alias("party"))
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -223,26 +219,23 @@ def main(argv: list[str] | None = None) -> int:
     res = run_pipeline(
         spark, records, reference_sets, cfg,
         checkpoint_dir=args.checkpoint_dir,
-        with_clusters=False, with_metrics=False,
+        with_clusters=False, with_metrics=True,
     )
-    matches = res.matches.cache()
-    matches_size = matches.count()
-    tp = matches.where(F.col("record1") == F.col("record2")).count()
+    m = res.metrics
     elapsed = time.time() - t0
 
     if args.output:
-        matches.write.mode("overwrite").parquet(args.output)
+        res.matches.write.mode("overwrite").parquet(args.output)
 
     # Simulator.printResult parity (Simulator.java:60-72)
-    db_size = extras["db_size"] or max(
-        records.where("party='A'").count(), records.where("party='B'").count()
-    )
+    tp, n_matches = m.true_positives, m.n_matches
+    db_size = extras["db_size"] or max(m.n_alice, m.n_bob)
     commons = int(db_size * extras["common_records"])
     print(f"Execution time: {elapsed:.1f} seconds")
     print(tp)
-    print(matches_size)
+    print(n_matches)
     print(f"Recall : {tp / commons if commons else float('nan')}")
-    print(f"Precision : {tp / matches_size if matches_size else float('nan')}")
+    print(f"Precision : {tp / n_matches if n_matches else float('nan')}")
     return 0
 
 

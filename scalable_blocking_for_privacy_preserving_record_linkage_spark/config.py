@@ -67,11 +67,6 @@ class PPRLConfig:
     # (tests/test_bloom.py); HLSH and score_joined read the layout from the
     # column type. The HLSH benchmark workload runs sparse.
     bloom_representation: str = "dense"
-    # meta-blocking edge pruning (north-star; reference has none):
-    # keep a candidate pair only if it co-occurs in >= min_cbs_weight blocks
-    # (CBS) and, if set, its sum of 1/|block| >= min_arcs_weight (ARCS)
-    min_cbs_weight: int = 1
-    min_arcs_weight: float | None = None
 
     @property
     def num_attrs(self) -> int:

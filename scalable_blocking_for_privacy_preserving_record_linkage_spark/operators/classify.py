@@ -111,7 +111,8 @@ def cells_expr(
     """``array<struct<s:int, classID:string, score:int>>`` over the record's
     ``cfg.blocking_attrs`` columns: every (attribute, sample) cell, ordered
     by ``s``, from ONE pandas-UDF call per record. Usable inside any
-    projection (``classify_wide``, the streaming enriched select).
+    projection (``classify_wide``, ``run_pipeline``'s encoded stage, the
+    streaming enriched select).
 
     The sorted samples are broadcast once. In each Arrow batch the UDF
     classifies every attribute's DISTINCT values once per sample (names

@@ -35,7 +35,8 @@ def with_blooms(
     cardinality is computed AT ENCODE TIME so the Dice denominator never
     recomputes per pair and only (bloom, card) rides the pair stream. The
     filters come from one projection with ``keep``, so a caller can put
-    other pandas UDFs (the stream side's classify) in the same pass.
+    other pandas UDFs (classify, in ``run_pipeline`` and on the stream side)
+    in the same pass.
     """
     udf = bloom.clk_udf(cfg)
     out = df.select(

@@ -32,13 +32,6 @@ from ..config import PPRLConfig
 _PAIR_SCHEMA = "record1 string, record2 string"
 
 
-def candidate_edge_weights(elements: DataFrame, cfg: PPRLConfig) -> DataFrame:
-    """(record1, record2, cbs_weight, arcs_weight) — the meta-blocking
-    edge-weight table (CBS = co-occurring block count, ARCS = Σ 1/|block|)
-    for inspection and threshold tuning."""
-    return _weighted_pairs(elements, cfg)
-
-
 def candidate_pairs(elements: DataFrame, cfg: PPRLConfig) -> DataFrame:
     """(blockID, recordID, party, score) -> distinct (record1, record2) —
     PURE CATALYST (whole-stage codegen, no Python in the hot path).
@@ -59,20 +52,11 @@ def candidate_pairs(elements: DataFrame, cfg: PPRLConfig) -> DataFrame:
     record1 is always the Alice id, record2 the Bob id
     (MetaBlocking.java:64-68).
     """
-    if cfg.min_cbs_weight <= 1 and cfg.min_arcs_weight is None:
-        # default thresholds select every pair, so no weights are needed:
-        # dedup the SLIM (record1, record2) stream directly — one exchange
-        # of two string columns, nothing else rides the pipeline's fattest
-        # shuffle
-        return _raw_pairs(elements, cfg).select("record1", "record2").dropDuplicates(
-            ["record1", "record2"]
-        )
-    agg = _weighted_pairs(elements, cfg)
-    if cfg.min_cbs_weight > 1:
-        agg = agg.where(F.col("cbs_weight") >= cfg.min_cbs_weight)
-    if cfg.min_arcs_weight is not None:
-        agg = agg.where(F.col("arcs_weight") >= cfg.min_arcs_weight)
-    return agg.select("record1", "record2")
+    # dedup the SLIM (record1, record2) stream directly: one exchange of
+    # two string columns, nothing else rides the pipeline's fattest shuffle
+    return _raw_pairs(elements, cfg).select("record1", "record2").dropDuplicates(
+        ["record1", "record2"]
+    )
 
 
 def _raw_pairs(elements: DataFrame, cfg: PPRLConfig) -> DataFrame:
@@ -149,16 +133,17 @@ def _raw_pairs(elements: DataFrame, cfg: PPRLConfig) -> DataFrame:
     )
 
 
-def _weighted_pairs(elements: DataFrame, cfg: PPRLConfig) -> DataFrame:
-    """Meta-blocking edge weights (north-star; the reference only dedups,
-    MetaBlocking.java:35): CBS = number of DISTINCT co-occurring blocks,
+def candidate_edge_weights(elements: DataFrame, cfg: PPRLConfig) -> DataFrame:
+    """(record1, record2, cbs_weight, arcs_weight): the meta-blocking
+    edge-weight table (north-star; the reference only dedups,
+    MetaBlocking.java:35). CBS = number of DISTINCT co-occurring blocks,
     ARCS = sum of 1/|block| over those distinct blocks. Cyclic pairing can
     emit the same blockID twice for one record (duplicate adjacent
-    classIDs), so emissions first collapse per (pair, blockID) — otherwise
+    classIDs), so emissions first collapse per (pair, blockID); otherwise
     one block counts as CBS=2 and double-adds its ARCS term. Two-level
-    aggregate (partial map-side both levels); only the weighted-pruning /
-    inspection paths pay it — the default candidate path takes the slim
-    dropDuplicates route in ``candidate_pairs``."""
+    aggregate (partial map-side both levels). For inspection and weighted
+    pruning, e.g. ``.where(cbs_weight >= 2)``; ``candidate_pairs`` never
+    pays it."""
     pairs = _raw_pairs(elements, cfg)
     per_block = pairs.groupBy("record1", "record2", "blockID").agg(
         F.min("block_n").alias("_bn")

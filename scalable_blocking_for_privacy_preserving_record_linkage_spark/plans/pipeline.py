@@ -2,27 +2,31 @@
 /root/reference/src/main/java/com/simulator/Simulator.java:21-58, rebuilt
 Spark-first).
 
-Stage graph (shuffles annotated; compare the reference's six, SURVEY.md §3):
+Stage graph (shuffles annotated; compare the reference's six, SURVEY.md §3;
+[name] marks a checkpoint):
 
-  records ──(normalize: narrow)──► classify_wide (ONE pandas-UDF call
-          per record returns all 12 cells: narrow) ──► block_ids explode
-          (narrow) ──(purge: slim groupBy(blockID) verdicts + left_semi,
-          window ranks on blockID: SHUFFLE 1 on hash(blockID))
-          ──(banded range-join: SHUFFLE 2)──► candidate pairs
-          ──(distinct: SHUFFLE 3)
-          ──(join blooms ×2: SHUFFLES 4,5)──► matches (codegen Dice filter)
-          ──(iterative CC joins)──► clusters
+  records ──(normalize: narrow)──► [encoded] ONE per-record pass: one
+          pandas-UDF call returns all 12 classify cells and three more
+          return the CLK filters, all in ONE Python evaluation node
+          (narrow) ──► block_ids explode (narrow) ──(purge: slim
+          groupBy(blockID) verdicts + left_semi, window ranks on blockID:
+          SHUFFLE 1 on hash(blockID))──► [block_elements]
+          ──(banded range-join: SHUFFLE 2)──(distinct: SHUFFLE 3)──►
+          [candidates] ──(attach filters ×2: SHUFFLES 4,5)──► [matches]
+          (codegen Dice filter) ──(iterative CC joins)──► clusters
 
-The reference's 12-way classify-union + groupBy(recordID) regroup
-collapses into the stateless wide classify (no shuffle at all before
-block formation), its two per-party block groupBys + inner join collapse
-into one slim count-aggregate purge, and its per-row sorted-
-neighborhood loop becomes a codegen banded range-join — five shuffles on
-slimmer rows versus the reference's six on wider ones, with no Python in
-the per-pair path.
+Classify and encode are stateless functions of the same normalized
+attributes, so they cross the Python boundary once, as the stream side
+does (streaming/jobs.py). The reference's 12-way classify-union +
+groupBy(recordID) regroup collapses into that stateless pass (no shuffle
+at all before block formation), its two per-party block groupBys + inner
+join collapse into one slim count-aggregate purge, and its per-row
+sorted-neighborhood loop becomes a codegen banded range-join — five
+shuffles on slimmer rows versus the reference's six on wider ones, with
+no Python in the per-pair path.
 
-Every stage can checkpoint to Parquet (Iceberg in production) with a
-lineage manifest; a rerun with the same config resumes after the last
+The four marked stages checkpoint to Parquet (Iceberg in production) with
+a lineage manifest; a rerun with the same config resumes after the last
 completed stage (north-star resumability requirement).
 """
 
@@ -75,12 +79,23 @@ def run_pipeline(
 
     samples = classify.build_reference_samples(reference_sets, cfg, max(n_alice, n_bob))
 
-    # stateless wide classify: all 12 (attr, sample) cells from one UDF
-    # call per record — no explode-then-regroup shuffle
-    classified = checkpoint_stage(
-        lambda: classify.classify_wide(spark, normalized, samples, cfg),
-        spark, checkpoint_dir, "classified", ph,
+    # classify's cells and the CLK filters in one projection: one Python
+    # node, one checkpoint. Without a checkpoint, a consumer of only `arr`
+    # or only the filters prunes the node to that UDF kind.
+    encoded = checkpoint_stage(
+        lambda: matching.with_blooms(
+            normalized,
+            [
+                F.col(cfg.id_col).cast("string").alias("recordID"),
+                F.col("party"),
+                classify.cells_expr(spark, samples, cfg).alias("arr"),
+            ],
+            cfg,
+        ),
+        spark, checkpoint_dir, "encoded", ph,
     )
+    classified = encoded.select("recordID", "party", "arr")
+    blooms = encoded.drop("arr")
     elements = checkpoint_stage(
         lambda: blocking.purge_blocks(
             blocking.block_ids_from_arrays(classified, cfg), cfg
@@ -98,10 +113,6 @@ def run_pipeline(
     truncate = checkpoint_dir is None and (with_clusters or with_metrics)
     if truncate:
         candidates = candidates.localCheckpoint()
-    blooms = checkpoint_stage(
-        lambda: matching.encode_blooms(normalized, cfg),
-        spark, checkpoint_dir, "blooms", ph,
-    )
     matches = checkpoint_stage(
         lambda: matching.match_candidates(candidates, blooms, cfg),
         spark, checkpoint_dir, "matches", ph,

