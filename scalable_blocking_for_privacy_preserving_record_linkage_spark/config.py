@@ -60,10 +60,11 @@ class PPRLConfig:
     # AQE cannot infer this itself: the pandas-UDF encoder hides the size.
     broadcast_blooms: bool = False
     # CLK wire format: "dense" ships each filter as ceil(m/64) packed
-    # int64 words (376 B at m=3000) and scores with allocation-free
-    # zip_with/bit_count codegen; "sparse" ships the sorted set-bit
-    # positions as array<smallint> (2 B per set bit) and scores with
-    # array_intersect, which allocates per pair. Same match set either way
+    # int64 words (376 B at m=3000) and scores with zip_with/bit_count,
+    # which Spark interprets per element (zip_with and aggregate have no
+    # codegen); "sparse" ships the sorted set-bit positions as
+    # array<smallint> (2 B per set bit) and scores with array_intersect
+    # (codegen'd, but it allocates per pair). Same match set either way
     # (tests/test_bloom.py); HLSH and score_joined read the layout from the
     # column type. The HLSH benchmark workload runs sparse.
     bloom_representation: str = "dense"

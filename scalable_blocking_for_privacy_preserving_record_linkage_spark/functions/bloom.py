@@ -149,9 +149,10 @@ def cardinality_expr(f: Column | str, layout: str) -> Column:
 
 
 def intersection_expr(f1: Column, f2: Column, layout: str) -> Column:
-    """|f1 AND f2| as one codegen'd expression. Dense: ``zip_with`` +
-    ``bit_count``. Sparse: positions are distinct within each filter, so the
-    set-intersection size IS the bitset-AND popcount."""
+    """|f1 AND f2| as one Catalyst expression. Dense: ``zip_with`` +
+    ``bit_count``, which ``zip_with`` and ``aggregate`` evaluate
+    interpreted, per element. Sparse: positions are distinct within each
+    filter, so the set-intersection size IS the bitset-AND popcount."""
     if layout == "sparse":
         return F.size(F.array_intersect(f1, f2))
     return F.aggregate(

@@ -64,8 +64,10 @@ def _components(edges: DataFrame) -> DataFrame:
     Edges are kept as child -> parent (u > v), and ``parent`` below is each
     child's smallest parent. Large star: every edge (u, v) re-points to
     v's smallest parent. Small star: u and all its parents point to u's
-    smallest parent. The round's one action checks the fixed point exactly
-    and materializes the round's lazy checkpoint.
+    smallest parent. A round is not one action: under AQE, building the
+    round's ``localCheckpoint(eager=False)`` already runs the round's
+    shuffle stages (5 jobs), and the exact fixed-point check then runs 3
+    more over the checkpointed edges.
     """
     e = (
         edges.select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))

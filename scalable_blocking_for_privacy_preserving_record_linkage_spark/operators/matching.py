@@ -10,10 +10,11 @@ Scale design:
   MetaBlocking.java:37-41) are plain shuffled equi-joins; the bloom side is
   repartitioned on the join key so AQE can coalesce/skew-split. On a real
   cluster the bloom table would be bucketed by recordID (SURVEY.md §2.3).
-* ``isMatch`` becomes a whole-stage-codegen expression: per attribute
-  ``2*|a∧b| >= t*(|a|+|b|)`` (division-free, exact for dyadic t) with the
-  NaN-guard for empty filters; match iff >= ``matches_to_accept`` attributes
-  pass (MetaBlocking.java:98-104).
+* ``isMatch`` becomes one Catalyst expression with no Python: per
+  attribute ``2*|a∧b| >= t*(|a|+|b|)`` (division-free, exact for dyadic t)
+  with the NaN-guard for empty filters; match iff >= ``matches_to_accept``
+  attributes pass (MetaBlocking.java:98-104). The dense popcount
+  (``zip_with`` + ``aggregate``) is interpreted per element, not codegen'd.
 """
 
 from __future__ import annotations

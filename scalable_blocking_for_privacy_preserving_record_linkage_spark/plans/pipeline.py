@@ -13,7 +13,7 @@ Stage graph (shuffles annotated; compare the reference's six, SURVEY.md §3;
           SHUFFLE 1 on hash(blockID))──► [block_elements]
           ──(banded range-join: SHUFFLE 2)──(distinct: SHUFFLE 3)──►
           [candidates] ──(attach filters ×2: SHUFFLES 4,5)──► [matches]
-          (codegen Dice filter) ──(iterative CC joins)──► clusters
+          (Catalyst Dice filter) ──(iterative CC joins)──► clusters
 
 Classify and encode are stateless functions of the same normalized
 attributes, so they cross the Python boundary once, as the stream side

@@ -12,6 +12,7 @@ from scalable_blocking_for_privacy_preserving_record_linkage_spark.operators imp
     hlsh,
     matching,
 )
+from scalable_blocking_for_privacy_preserving_record_linkage_spark.plans import oracles
 from scalable_blocking_for_privacy_preserving_record_linkage_spark.sources import fixtures
 
 CFG = PPRLConfig()
@@ -66,3 +67,45 @@ def test_bucket_purge_caps_skew(spark, blooms):
         blooms, CFG, num_passes=2, bits_per_key=8, max_bucket_size=1
     )
     assert pairs.count() == 0
+
+
+@pytest.mark.parametrize("num_passes", [0, -1])
+def test_num_passes_guard(spark, blooms, num_passes):
+    with pytest.raises(ValueError, match="num_passes"):
+        hlsh.hlsh_keys(blooms, CFG, num_passes=num_passes)
+    with pytest.raises(ValueError, match="num_passes"):
+        hlsh.hlsh_candidate_pairs(blooms, CFG, num_passes=num_passes)
+
+
+@pytest.mark.parametrize("rep", ["dense", "sparse"])
+def test_keys_match_python_spec(spark, rep):
+    """Executable spec: a pass key is ``sum(1 << j)`` over the pass's
+    sampled positions (the draw ``oracles.hlsh_positions`` spells out for
+    the DuckDB oracle) that are set in the record's filters."""
+    cfg = PPRLConfig(bloom_representation=rep)
+    records = fixtures.spark_records(spark, 20, overlap=0.5, typo_rate=0.1, seed=5)
+    empty = spark.createDataFrame(
+        [("E0000001", "A", "", "", "")],
+        "id string, party string, surname string, name string, city string",
+    )
+    records = records.select("id", "party", *cfg.blocking_attrs).unionByName(empty)
+    cols = [f"bloom_{i + 1}" for i in range(cfg.num_attrs)]
+    blooms = matching.encode_blooms(records, cfg).cache()
+    rows = blooms.collect()
+    assert any(not any(any(r[c]) for c in cols) for r in rows)  # the empty filter
+
+    def is_set(filt, off):
+        if rep == "sparse":
+            return off in filt
+        return (filt[off // 64] >> (off % 64)) & 1 == 1
+
+    positions = oracles.hlsh_positions(cfg, num_passes=4, bits_per_key=12)
+    want = set()
+    for r in rows:
+        keys = [0] * 4
+        for p, j, seg, off in positions:
+            if is_set(r[cols[seg - 1]], off):
+                keys[p] += 1 << j
+        want |= {(p, k, r["recordID"], r["party"]) for p, k in enumerate(keys)}
+    got = hlsh.hlsh_keys(blooms, cfg, num_passes=4, bits_per_key=12).collect()
+    assert len(got) == 4 * len(rows) and set(map(tuple, got)) == want

@@ -2,11 +2,12 @@
 must be visible in .explain output, not assumed.
 
 * predicate pushdown + column pruning reach the parquet scan
-* the Dice matching path contains NO Python evaluation (pure codegen)
+* the Dice matching path contains NO Python evaluation (pure Catalyst)
 * the candidate generator contains NO Python evaluation
 * classify is ONE Python call per record, and both the batch pipeline and
   the stream side evaluate it with the CLK encoders in one Python node
 * broadcast join is chosen for the small dimension side
+* HLSH key plans build in a bounded number of Python -> JVM round trips
 """
 
 from __future__ import annotations
@@ -20,12 +21,14 @@ from pyspark.sql import functions as F
 from scalable_blocking_for_privacy_preserving_record_linkage_spark.config import PPRLConfig
 from scalable_blocking_for_privacy_preserving_record_linkage_spark.operators import (
     classify,
+    hlsh,
     matching,
     window,
 )
 from scalable_blocking_for_privacy_preserving_record_linkage_spark.plans import pipeline
 from scalable_blocking_for_privacy_preserving_record_linkage_spark.sources import fixtures
 from scalable_blocking_for_privacy_preserving_record_linkage_spark.streaming import jobs
+from conftest import count_jvm_calls
 
 SF = "/root/testdata/sf0.001"
 
@@ -155,6 +158,18 @@ def test_pipeline_encoded_stage_one_python_node(spark, monkeypatch):
     assert len(nodes) == 1, nodes
     assert nodes[0].count("_classify(") == 1, nodes[0]
     assert nodes[0].count("_encode(") == cfg.num_attrs, nodes[0]
+
+
+@pytest.mark.parametrize("rep", ["dense", "sparse"])
+def test_hlsh_keys_plan_build_is_cheap(spark, rep):
+    """Building the 8-pass x 16-bit key plan is a fixed handful of driver
+    round trips, not one per sampled bit (thousands when each bit was its
+    own Column call)."""
+    cfg = PPRLConfig(bloom_representation=rep)
+    blooms = matching.encode_blooms(fixtures.spark_records(spark, 10, seed=3), cfg)
+    with count_jvm_calls() as calls:
+        hlsh.hlsh_keys(blooms, cfg, 8, 16)
+    assert calls[0] <= 100, calls[0]
 
 
 def test_small_dim_join_broadcasts(spark):
