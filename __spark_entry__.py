@@ -183,7 +183,7 @@ def _q_pprl_pruned_candidates(spark, sf_dir):
 
 
 def _q_pprl_candidates(spark, sf_dir):
-    """Sorted-neighborhood candidate pairs from the banded window over purged blocks (J4/D5)."""
+    """Sorted-neighborhood candidate pairs from the window functions over purged blocks (J4/D5)."""
     res = _pprl_pipeline(spark, sf_dir)
     return res.candidates
 

@@ -53,12 +53,6 @@ class PPRLConfig:
     # drop blocks with more elements; None = no size cap (the same
     # groupBy + left_semi purge still drops single-party blocks)
     purge_max_block_size: int | None = 500
-    # hint the two pairs×blooms attach-joins to broadcast the bloom side.
-    # Correct ONLY when the encoded party tables fit an executor (single-
-    # node / bench scale); at cluster scale leave False — the blooms are
-    # petabytes there and the join must stay a shuffled (bucketed) join.
-    # AQE cannot infer this itself: the pandas-UDF encoder hides the size.
-    broadcast_blooms: bool = False
     # CLK wire format: "dense" ships each filter as ceil(m/64) packed
     # int64 words (376 B at m=3000) and scores with zip_with/bit_count,
     # which Spark interprets per element (zip_with and aggregate have no

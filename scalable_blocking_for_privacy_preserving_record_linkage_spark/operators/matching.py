@@ -91,8 +91,6 @@ def _attach_blooms(pairs: DataFrame, blooms: DataFrame, cfg: PPRLConfig) -> Data
     """(record1, record2) × blooms -> the two attach-joins: record1 takes
     the Alice-side filters, record2 the Bob-side (MetaBlocking.java:37-41)."""
     blooms_a, blooms_b = split_blooms(blooms, cfg)
-    if cfg.broadcast_blooms:
-        blooms_a, blooms_b = F.broadcast(blooms_a), F.broadcast(blooms_b)
     return pairs.join(blooms_a, "record1", "inner").join(blooms_b, "record2", "inner")
 
 

@@ -10,11 +10,12 @@ adaptive rule is exactly equivalent to: *pair each element with its
 scan continues while ``steps <= W + same_seen - 2``, and steps =
 same_seen + opp_seen, so it stops once ``opp_seen = W - 1``).
 
-``candidate_pairs`` implements it in pure Catalyst: one window pass
-computes each element's rank and opposite-predecessor count, then a BANDED
-equi-join (bucket = party-rank / (W-1), each looker probes ≤2 buckets)
-resolves the per-element range. Whole-stage codegen end to end, no Python,
-and the blockID window reuses the purge stage's exchange. Its executable
+``candidate_pairs`` implements it in pure Catalyst, with no join: after one
+hash(blockID) exchange, a window over (blockID, party) collects each
+element's last ``W - 1`` own-party ids (itself included); a window over the
+block then hands every element that list from the nearest preceding
+opposite-party element, which is exactly its ``W - 1`` nearest preceding
+opposite-party elements, and an explode emits the pairs. Its executable
 specification, a numpy kernel per block, is ``tests/window_kernel.py``.
 
 Pairs are emitted Alice-first (record1 = Alice id, record2 = Bob id,
@@ -34,20 +35,13 @@ _PAIR_SCHEMA = "record1 string, record2 string"
 
 def candidate_pairs(elements: DataFrame, cfg: PPRLConfig) -> DataFrame:
     """(blockID, recordID, party, score) -> distinct (record1, record2) —
-    PURE CATALYST (whole-stage codegen, no Python in the hot path).
+    PURE CATALYST (JVM operators only, no Python in the hot path).
 
     Formulation: "pair each element with its W-1 nearest PRECEDING
     opposite-party elements" (the adaptive-window equivalence proved in
-    the module docstring). Per element, with ``pos`` its rank in the
-    block's total order and ``p_idx`` its rank within its own party,
-    the count of opposite-party predecessors is ``opp_before = pos -
-    p_idx``; its partners are the opposite-party elements with party-rank
-    in ``[opp_before - W + 2, opp_before]``. That range is resolved with a
-    BANDED equi-join — bucket = (party_rank - 1) / (W - 1), each looker
-    probes at most two buckets — so the pair space never materializes
-    beyond the true candidates. One window pass + one bounded self-join,
-    both JVM-side; the window reuses the purge stage's hash(blockID)
-    exchange.
+    the module docstring), built from two window functions over one
+    hash(blockID) exchange and an explode; the pair dedup is the second
+    and last exchange.
 
     record1 is always the Alice id, record2 the Bob id
     (MetaBlocking.java:64-68).
@@ -67,69 +61,44 @@ def _raw_pairs(elements: DataFrame, cfg: PPRLConfig) -> DataFrame:
     from pyspark.sql import Window as W
 
     k = cfg.window_size - 1
-    if k <= 0:
+    if k <= 0:  # rowsBetween(1 - k, 0) would be an invalid frame
         return elements.sparkSession.createDataFrame(
             [], _PAIR_SCHEMA + ", blockID string, block_n bigint"
         )
 
-    order = [F.col("score"), F.col("party"), F.col("recordID")]
-    win_all = W.partitionBy("blockID").orderBy(*order)
-    cum = win_all.rowsBetween(W.unboundedPreceding, W.currentRow)
-
-    pos = F.row_number().over(win_all)
-    cnt_a = F.sum(F.when(F.col("party") == "A", 1).otherwise(0)).over(cum)
-    block_n = F.count(F.lit(1)).over(
-        W.partitionBy("blockID").rowsBetween(
-            W.unboundedPreceding, W.unboundedFollowing
-        )
+    order = ("score", "party", "recordID")
+    # own: the last k ids of the element's own party, itself included
+    own = F.collect_list("recordID").over(
+        W.partitionBy("blockID", "party").orderBy(*order).rowsBetween(1 - k, 0)
     )
-    e = elements.select(
+    in_block = W.partitionBy("blockID").orderBy(*order)
+    before = in_block.rowsBetween(W.unboundedPreceding, -1)
+
+    def nearest(party: str):
+        """The k nearest preceding ``party`` ids: the ``own`` list of the
+        last ``party`` element before this one."""
+        own_of_party = F.when(F.col("party") == party, F.col("own"))
+        return F.last(own_of_party, ignorenulls=True).over(before)
+
+    # hash(blockID) satisfies both windows' distributions: one exchange
+    e = elements.repartition("blockID").select(
+        "blockID", "recordID", "party", "score", own.alias("own")
+    )
+    is_a = F.col("party") == "A"
+    e = e.select(
         "blockID",
         "recordID",
         "party",
-        pos.alias("pos"),
-        F.when(F.col("party") == "A", cnt_a).otherwise(pos - cnt_a).alias("p_idx"),
-        block_n.alias("block_n"),
-    ).withColumn("opp_before", F.col("pos") - F.col("p_idx"))
-
-    look = (
-        e.where(F.col("opp_before") >= 1)
-        .select(
-            "blockID",
-            "recordID",
-            "party",
-            "block_n",
-            F.when(F.col("party") == "A", F.lit("B")).otherwise(F.lit("A")).alias("t_party"),
-            F.greatest(F.lit(1), F.col("opp_before") - k + 1).alias("lo"),
-            F.col("opp_before").alias("hi"),
-        )
-        .withColumn(
-            "bucket",
-            F.explode(
-                F.array_distinct(
-                    F.array(
-                        F.floor((F.col("lo") - 1) / k),
-                        F.floor((F.col("hi") - 1) / k),
-                    )
-                )
-            ),
-        )
-    )
-    tgt = e.select(
+        F.count(F.lit(1)).over(
+            in_block.rowsBetween(W.unboundedPreceding, W.unboundedFollowing)
+        ).alias("block_n"),
+        F.when(is_a, nearest("B")).otherwise(nearest("A")).alias("t_ids"),
+    ).select("blockID", "recordID", "party", "block_n", F.explode("t_ids").alias("t_id"))
+    return e.select(
+        F.when(is_a, F.col("recordID")).otherwise(F.col("t_id")).alias("record1"),
+        F.when(is_a, F.col("t_id")).otherwise(F.col("recordID")).alias("record2"),
         "blockID",
-        F.col("party").alias("t_party"),
-        F.col("recordID").alias("t_id"),
-        F.col("p_idx").alias("t_idx"),
-        F.floor((F.col("p_idx") - 1) / k).alias("bucket"),
-    )
-    joined = look.join(tgt, ["blockID", "t_party", "bucket"]).where(
-        F.col("t_idx").between(F.col("lo"), F.col("hi"))
-    )
-    return joined.select(
-        F.when(F.col("party") == "A", F.col("recordID")).otherwise(F.col("t_id")).alias("record1"),
-        F.when(F.col("party") == "A", F.col("t_id")).otherwise(F.col("recordID")).alias("record2"),
-        F.col("blockID"),
-        F.col("block_n"),
+        "block_n",
     )
 
 

@@ -9,10 +9,11 @@ Stage graph (shuffles annotated; compare the reference's six, SURVEY.md §3;
           pandas-UDF call returns all 12 classify cells and three more
           return the CLK filters, all in ONE Python evaluation node
           (narrow) ──► block_ids explode (narrow) ──(purge: slim
-          groupBy(blockID) verdicts + left_semi, window ranks on blockID:
-          SHUFFLE 1 on hash(blockID))──► [block_elements]
-          ──(banded range-join: SHUFFLE 2)──(distinct: SHUFFLE 3)──►
-          [candidates] ──(attach filters ×2: SHUFFLES 4,5)──► [matches]
+          groupBy(blockID) verdicts + left_semi: SHUFFLE 1 on
+          hash(blockID))──► [block_elements]
+          ──(two window functions + explode: SHUFFLE 2 on hash(blockID))
+          ──(distinct: SHUFFLE 3)──► [candidates]
+          ──(attach filters ×2: SHUFFLES 4,5)──► [matches]
           (Catalyst Dice filter) ──(iterative CC joins)──► clusters
 
 Classify and encode are stateless functions of the same normalized
@@ -21,17 +22,21 @@ does (streaming/jobs.py). The reference's 12-way classify-union +
 groupBy(recordID) regroup collapses into that stateless pass (no shuffle
 at all before block formation), its two per-party block groupBys + inner
 join collapse into one slim count-aggregate purge, and its per-row
-sorted-neighborhood loop becomes a codegen banded range-join — five
+sorted-neighborhood loop becomes two window functions and an explode — five
 shuffles on slimmer rows versus the reference's six on wider ones, with
 no Python in the per-pair path.
 
 The four marked stages checkpoint to Parquet (Iceberg in production) with
-a lineage manifest; a rerun with the same config resumes after the last
-completed stage (north-star resumability requirement).
+a lineage manifest; a rerun with the same config over the same input
+files resumes after the last completed stage (north-star resumability
+requirement). In-memory inputs never resume.
 """
 
 from __future__ import annotations
 
+import hashlib
+import json
+import uuid
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -66,7 +71,7 @@ def run_pipeline(
     with_metrics: bool = True,
 ) -> PipelineResult:
     """records: (id, surname, name, city, party); reference_sets: (col1..colN)."""
-    ph = cfg.params_hash()
+    key = _stage_key(cfg, records, reference_sets)
 
     normalized = ensure_parallelism(extract.normalize_records(records, cfg)).cache()
 
@@ -92,7 +97,7 @@ def run_pipeline(
             ],
             cfg,
         ),
-        spark, checkpoint_dir, "encoded", ph,
+        spark, checkpoint_dir, "encoded", key,
     )
     classified = encoded.select("recordID", "party", "arr")
     blooms = encoded.drop("arr")
@@ -100,11 +105,11 @@ def run_pipeline(
         lambda: blocking.purge_blocks(
             blocking.block_ids_from_arrays(classified, cfg), cfg
         ),
-        spark, checkpoint_dir, "block_elements", ph,
+        spark, checkpoint_dir, "block_elements", key,
     )
     candidates = checkpoint_stage(
         lambda: window.candidate_pairs(elements, cfg),
-        spark, checkpoint_dir, "candidates", ph,
+        spark, checkpoint_dir, "candidates", key,
     )
     # the reference caches matches before its double count (Simulator.java:50);
     # without a durable checkpoint we truncate lineage locally so downstream
@@ -115,7 +120,7 @@ def run_pipeline(
         candidates = candidates.localCheckpoint()
     matches = checkpoint_stage(
         lambda: matching.match_candidates(candidates, blooms, cfg),
-        spark, checkpoint_dir, "matches", ph,
+        spark, checkpoint_dir, "matches", key,
     )
     if truncate:
         matches = matches.localCheckpoint()
@@ -138,6 +143,20 @@ def run_pipeline(
         components=components,
         metrics=metrics,
     )
+
+
+def _stage_key(cfg: PPRLConfig, *inputs: DataFrame) -> str:
+    """Checkpoint key: the config hash plus the sorted file names each
+    input reads. Rewriting a Parquet input renames its part files (every
+    write stamps a fresh UUID into them), so the key moves with the data.
+    An input with no files (an in-memory frame) has no such identity: it
+    gets a key that never matches, and every stage recomputes.
+    ``semanticHash()`` is no substitute: it differs between processes."""
+    files = [sorted(df.inputFiles()) for df in inputs]
+    if not all(files):
+        return uuid.uuid4().hex
+    blob = json.dumps([cfg.params_hash(), files])
+    return hashlib.sha256(blob.encode("utf-8")).hexdigest()[:16]
 
 
 def _party_sizes(records: DataFrame) -> tuple[int, int, int]:

@@ -18,9 +18,7 @@ from pyspark.sql import functions as F
 from ..config import PPRLConfig
 from ..operators.ranking import global_rank
 
-TESTDATA_CFG = PPRLConfig(
-    rs_size_override=25, purge_max_block_size=500, broadcast_blooms=True
-)
+TESTDATA_CFG = PPRLConfig(rs_size_override=25, purge_max_block_size=500)
 
 # DuckDB twin of records_from_documents (kept adjacent so they evolve together)
 RECORDS_ORACLE_SQL = """

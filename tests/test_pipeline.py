@@ -103,20 +103,44 @@ def test_sample_fraction_at_load(spark):
 
 
 def test_checkpoint_resume(spark, tmp_path):
+    """A rerun over the same Parquet inputs resumes from the checkpoints; a
+    rerun over a rewritten input recomputes and equals a fresh run."""
     cfg = PPRLConfig(rs_size_override=10, seed=5)
-    recs = fixtures.spark_records(spark, 150, overlap=0.5, seed=5)
-    rs = fixtures.spark_reference_sets(spark, seed=5)
+    recs_path = str(tmp_path / "records")
+    fixtures.spark_records(spark, 150, overlap=0.5, seed=5).write.parquet(recs_path)
+    fixtures.spark_reference_sets(spark, seed=5).write.parquet(str(tmp_path / "rs"))
+    rs = spark.read.parquet(str(tmp_path / "rs"))
     d = str(tmp_path / "ckpt")
-    r1 = run_pipeline(spark, recs, rs, cfg, checkpoint_dir=d, with_clusters=False)
-    n1 = r1.matches.count()
+
+    def run(checkpoint_dir=d, cfg=cfg):
+        return run_pipeline(
+            spark, spark.read.parquet(recs_path), rs, cfg,
+            checkpoint_dir=checkpoint_dir, with_clusters=False,
+        )
+
+    def matches_manifest():
+        with open(os.path.join(d, "matches", io.MANIFEST)) as f:
+            return f.read()
+
+    n1 = run().matches.count()
     # classify and encode share one per-record stage and one checkpoint
     assert set(os.listdir(d)) == {"encoded", "block_elements", "candidates", "matches"}
-    # second run resumes from checkpoints (same params hash) and agrees
-    r2 = run_pipeline(spark, recs, rs, cfg, checkpoint_dir=d, with_clusters=False)
-    assert r2.matches.count() == n1
+    written = matches_manifest()
+    # second run resumes from checkpoints (same key: config and input
+    # files) and agrees; the manifest, with its wall time, is not rewritten
+    assert run().matches.count() == n1
+    assert matches_manifest() == written
+    # a rewritten input has new part-file names: the rerun recomputes
+    fixtures.spark_records(spark, 150, overlap=1.0, seed=5).write.mode(
+        "overwrite"
+    ).parquet(recs_path)
+    fresh = sorted(run(checkpoint_dir=None).matches.select("record1", "record2").collect())
+    assert len(fresh) != n1
+    assert sorted(run().matches.select("record1", "record2").collect()) == fresh
+    assert matches_manifest() != written
     # changed params invalidate the checkpoint (different hash)
     cfg2 = PPRLConfig(rs_size_override=10, seed=5, window_size=3)
-    r3 = run_pipeline(spark, recs, rs, cfg2, checkpoint_dir=str(tmp_path / "ckpt2"), with_clusters=False)
+    r3 = run(checkpoint_dir=str(tmp_path / "ckpt2"), cfg=cfg2)
     assert r3.matches is not None
 
 
@@ -140,14 +164,21 @@ def test_write_checkpoint_runs_one_job(spark, tmp_path):
 
 def test_truncated_manifest_recomputes(spark, tmp_path):
     """A manifest cut short (a crash mid-write) reads as "no checkpoint":
-    the rerun recomputes that stage and rewrites a whole manifest."""
+    the rerun recomputes that stage and rewrites a whole manifest, while the
+    stages before it resume (inputs from Parquet: in-memory ones never
+    resume)."""
     cfg = PPRLConfig(rs_size_override=10, seed=5)
-    recs = fixtures.spark_records(spark, 150, overlap=0.5, seed=5)
-    rs = fixtures.spark_reference_sets(spark, seed=5)
+    fixtures.spark_records(spark, 150, overlap=0.5, seed=5).write.parquet(str(tmp_path / "recs"))
+    fixtures.spark_reference_sets(spark, seed=5).write.parquet(str(tmp_path / "rs"))
+    recs = spark.read.parquet(str(tmp_path / "recs"))
+    rs = spark.read.parquet(str(tmp_path / "rs"))
     d = str(tmp_path / "ckpt")
     kw = dict(checkpoint_dir=d, with_clusters=False, with_metrics=False)
     n1 = run_pipeline(spark, recs, rs, cfg, **kw).matches.count()
     mpath = os.path.join(d, "matches", io.MANIFEST)
+    cpath = os.path.join(d, "candidates", io.MANIFEST)
+    with open(cpath) as f:
+        candidates_manifest = f.read()
     with open(mpath) as f:
         text = f.read()
     with open(mpath, "w") as f:
@@ -155,6 +186,8 @@ def test_truncated_manifest_recomputes(spark, tmp_path):
     assert run_pipeline(spark, recs, rs, cfg, **kw).matches.count() == n1
     with open(mpath) as f:
         assert json.load(f)["completed"]
+    with open(cpath) as f:
+        assert f.read() == candidates_manifest
 
 
 def test_resume_reads_manifest_schema_without_jobs(spark, tmp_path):

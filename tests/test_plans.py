@@ -3,7 +3,7 @@ must be visible in .explain output, not assumed.
 
 * predicate pushdown + column pruning reach the parquet scan
 * the Dice matching path contains NO Python evaluation (pure Catalyst)
-* the candidate generator contains NO Python evaluation
+* the candidate generator contains NO Python evaluation and no join
 * classify is ONE Python call per record, and both the batch pipeline and
   the stream side evaluate it with the CLK encoders in one Python node
 * broadcast join is chosen for the small dimension side
@@ -80,15 +80,25 @@ def test_match_path_has_no_python_eval(spark):
 
 
 def test_candidate_generation_is_pure_catalyst(spark):
+    """Candidates come from window functions over ONE hash(blockID)
+    exchange and an explode: no Python, no join, and a bounded number of
+    Python -> JVM round trips to build."""
     elements = spark.createDataFrame(
         [("b1", "x", "A", 1), ("b1", "y", "B", 2)],
         "blockID string, recordID string, party string, score int",
     )
-    plan = plan_of(window.candidate_pairs(elements, PPRLConfig()))
+    with count_jvm_calls() as calls:
+        pairs = window.candidate_pairs(elements, PPRLConfig())
+    assert calls[0] <= 700, calls[0]
+    plan = plan_of(pairs)
     assert "ArrowEvalPython" not in plan and "FlatMapGroupsInPandas" not in plan
-    # window ranks + a join resolve the neighborhood — all JVM operators
-    # (AQE prints the pre-final plan, so codegen spans aren't labeled yet)
-    assert "row_number()" in plan and "Join" in plan
+    assert "Join" not in plan, plan
+    # the pair dedup's exchange, then the one hash(blockID) exchange, below
+    # both windows (AQE prints the pre-final plan)
+    exchanges = re.findall(r"Exchange hashpartitioning\((\w+)#", plan)
+    assert exchanges == ["record1", "blockID"], exchanges
+    assert plan.count("Window [") == 2, plan
+    assert plan.index("Exchange hashpartitioning(blockID#") > plan.rindex("Window ["), plan
 
 
 def _python_nodes(plan: str) -> list[str]:

@@ -7,6 +7,7 @@ import pytest
 
 from scalable_blocking_for_privacy_preserving_record_linkage_spark.config import PPRLConfig
 from scalable_blocking_for_privacy_preserving_record_linkage_spark.operators.window import (
+    candidate_edge_weights,
     candidate_pairs,
 )
 from window_kernel import candidate_pairs_kernel, window_pairs_block
@@ -97,27 +98,36 @@ def test_single_party_block_emits_nothing(spark):
     assert candidate_pairs(df, PPRLConfig()).count() == 0
 
 
-@pytest.mark.parametrize("w", [2, 3, 10])
+def _random_elements(rng, n_blocks, pool=0, dup_share=0.0):
+    """Random (blockID, recordID, party, score) rows with deliberate score
+    ties. ``pool`` > 0 draws record ids from a shared pool, so pairs
+    co-occur across blocks; ``dup_share`` repeats that share of elements
+    (cyclic pairing can put one record in one block twice)."""
+    rows = []
+    for b in range(n_blocks):
+        for kk in range(int(rng.integers(1, 25))):
+            if pool:
+                i = int(rng.integers(0, pool))
+                rid, party = f"r{i}", "AB"[i % 2]
+            else:
+                rid, party = f"r{b}_{kk}", "A" if rng.random() < 0.5 else "B"
+            row = (f"b{b}", rid, party, int(rng.integers(0, 6)))
+            rows.append(row)
+            if dup_share and rng.random() < dup_share:
+                rows.append(row)
+    return rows
+
+
+@pytest.mark.parametrize("w", [1, 2, 3, 10])
 def test_catalyst_equals_kernel(spark, w):
-    """The banded-range-join Catalyst plan and the applyInPandas kernel
+    """The window-function Catalyst plan and the applyInPandas kernel
     must produce identical pair sets on random multi-block inputs
     (including tied scores, where the (score, party, recordID) total
-    order decides)."""
+    order decides). W = 1 pairs nothing on either side."""
     rng = np.random.default_rng(99 + w)
-    rows = []
-    for b in range(12):
-        n = int(rng.integers(1, 25))
-        for kk in range(n):
-            rows.append(
-                (
-                    f"b{b}",
-                    f"r{b}_{kk}",
-                    "A" if rng.random() < 0.5 else "B",
-                    int(rng.integers(0, 6)),  # deliberate score ties
-                )
-            )
     df = spark.createDataFrame(
-        rows, "blockID string, recordID string, party string, score int"
+        _random_elements(rng, 12),
+        "blockID string, recordID string, party string, score int",
     )
     cfg = PPRLConfig(window_size=w)
     got = {(r["record1"], r["record2"]) for r in candidate_pairs(df, cfg).collect()}
@@ -125,14 +135,43 @@ def test_catalyst_equals_kernel(spark, w):
         (r["record1"], r["record2"])
         for r in candidate_pairs_kernel(df, cfg).collect()
     }
-    assert got == want and len(want) > 0
+    assert got == want
+    assert (len(want) > 0) == (w > 1)
+
+
+@pytest.mark.parametrize("w", [2, 5])
+def test_edge_weights_equal_kernel_emissions(spark, w):
+    """CBS/ARCS from ``candidate_edge_weights`` equal the weights
+    recomputed in pandas from the kernel's per-block emissions: CBS =
+    distinct co-occurring blocks, ARCS = sum of 1/|block| over them, with
+    |block| counting duplicate elements."""
+    rng = np.random.default_rng(7 + w)
+    rows = _random_elements(rng, 20, pool=30, dup_share=0.15)
+    pdf = pd.DataFrame(rows, columns=["blockID", "recordID", "party", "score"])
+    per_block = []
+    for block, g in pdf.groupby("blockID"):
+        out = window_pairs_block(g, w).drop_duplicates()
+        out["blockID"], out["block_n"] = block, len(g)
+        per_block.append(out)
+    emissions = pd.concat(per_block)
+    want = (
+        emissions.assign(arcs=1.0 / emissions["block_n"])
+        .groupby(["record1", "record2"])
+        .agg(cbs=("blockID", "size"), arcs=("arcs", "sum"))
+    )
+
+    df = spark.createDataFrame(
+        rows, "blockID string, recordID string, party string, score int"
+    )
+    got = candidate_edge_weights(df, PPRLConfig(window_size=w)).toPandas()
+    got = got.set_index(["record1", "record2"]).sort_index()
+    assert list(got.index) == list(want.index)
+    assert list(got["cbs_weight"]) == list(want["cbs"])
+    assert list(got["arcs_weight"]) == pytest.approx(list(want["arcs"]))
+    assert (want["cbs"] > 1).any()
 
 
 def test_cbs_arcs_edge_pruning(spark):
-    from scalable_blocking_for_privacy_preserving_record_linkage_spark.operators.window import (
-        candidate_edge_weights,
-    )
-
     # pair (x,y) co-occurs in two blocks of size 2; (x,z) in one block of 4
     rows = [
         ("b1", "x", "A", 1), ("b1", "y", "B", 2),
